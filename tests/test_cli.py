@@ -152,3 +152,119 @@ def test_cli_pmtiles_archive(spark, image_table, tmp_path):
         b = bytes(r.bytes)
         fetched[k] = max(fetched[k], b) if k in fetched else b
     assert got["tiles"] == fetched
+
+
+def _t_geojson(path, z=16):
+    """A T-shaped polygon in z=16 tile coordinates: a bar across the top
+    tile row 31441 (columns 47439..47442) and a stem down tile column
+    47440 to row 31444, kept off tile edges so each tile is in or out."""
+    import json
+    import math
+
+    n = 2.0 ** z
+
+    def lonlat(tx, ty):
+        lat = math.degrees(math.atan(math.sinh(math.pi * (1.0 - 2.0 * ty / n))))
+        return [tx / n * 360.0 - 180.0, lat]
+
+    pts = [(47439.3, 31441.3), (47442.7, 31441.3), (47442.7, 31441.6),
+           (47440.7, 31441.6), (47440.7, 31444.7), (47440.3, 31444.7),
+           (47440.3, 31441.6), (47439.3, 31441.6)]
+    ring = [lonlat(*p) for p in pts + pts[:1]]
+    path.write_text(json.dumps({"type": "Feature", "properties": {},
+                                "geometry": {"type": "Polygon", "coordinates": [ring]}}))
+
+
+def test_cli_one_fetch_feeds_every_sink(spark, tmp_path, monkeypatch):
+    """A self-contained CLI run: the fetch table, --tile-files, --pmtiles
+    and the mosaic all come from one inner broadcast fetch. The image
+    table lacks the selection's whole bottom row, so the mosaic extent
+    still has to reach the gap and render it black."""
+    import numpy as np
+
+    from tests.conftest import T_BBOX_Z16, T_SHAPE_Z16
+    from tilegrab_spark import Engine
+    from tilegrab_spark.kernels import png
+    from tilegrab_spark.kernels.pmtiles import read_pmtiles
+    from tilegrab_spark.sources.images import (
+        cells_for_tile_sets,
+        expected_pixels,
+        write_synthetic_image_table,
+    )
+
+    src = tmp_path / "t.geojson"
+    _t_geojson(src)
+    images = str(tmp_path / "images")
+    bottom = max(y for _, y in T_BBOX_Z16)
+    cells = cells_for_tile_sets(
+        {16: T_BBOX_Z16},
+        gaps=[(16, x, y) for x, y in T_BBOX_Z16 if y == bottom],
+        hot=((16, 47440, 31441), 3),  # three more revisions of one cell
+    )
+    write_synthetic_image_table(spark, images, cells, n_buckets=2)
+    stored: dict = {}
+    for _, x, y, s in cells:
+        stored.setdefault((x, y), []).append(f"16_{x}_{y}_{s}")
+    fetched_cells = sorted(c for c in T_SHAPE_Z16 if c in stored)
+    gap = (47440, bottom)
+    assert gap in T_SHAPE_Z16 and gap not in stored
+
+    plans = []
+    real_fetch = Engine.fetch
+
+    def spy(self, *args, **kwargs):
+        df = real_fetch(self, *args, **kwargs)
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return df
+
+    monkeypatch.setattr(Engine, "fetch", spy)
+    tiles_out, out = tmp_path / "tiles", tmp_path / "out"
+    # a real image table is far above the auto-broadcast threshold; so
+    # that this small one is too, only an explicit hint may broadcast
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    threshold = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        rc = main(
+            ["--source", str(src), "--shape", "--zoom", "16", "--images", images,
+             "--png", "--tile-files", "--pmtiles",
+             "--tiles-out", str(tiles_out), "--out", str(out), "--quiet"]
+        )
+    finally:
+        spark.conf.set(key, threshold)
+    assert rc == 0
+    assert len(plans) == 1
+    assert "SortMergeJoin" not in plans[0] and "BroadcastHashJoin" in plans[0]
+
+    # fetch table: every stored revision of the selected cells, no gap rows
+    rows = spark.read.parquet(str(tiles_out)).select("x", "y", "image_id", "bytes").collect()
+    assert all(r.bytes is not None for r in rows)
+    assert sorted((r.x, r.y, r.image_id) for r in rows) == sorted(
+        (x, y, i) for x, y in fetched_cells for i in stored[(x, y)]
+    )
+    payloads: dict = {}
+    for r in rows:
+        payloads.setdefault((r.x, r.y), []).append(bytes(r.bytes))
+
+    # mosaic: the extent spans the whole selection, gap row included
+    (m,) = spark.read.parquet(str(out / "mosaics")).collect()
+    assert (m.tminx, m.tminy, m.tmaxx, m.tmaxy) == (47439, 31441, 47442, bottom)
+    assert (m.w, m.h, m.n_tiles, m.n_bad) == (1024, 1024, len(rows), 0)
+    want = np.zeros((1024, 1024, 3), np.uint8)
+    for x, y in fetched_cells:
+        top = max(stored[(x, y)])  # last paste wins in image_id order
+        want[(y - 31441) * 256 : (y - 31440) * 256, (x - 47439) * 256 : (x - 47438) * 256] = (
+            expected_pixels(top)
+        )
+    canvas = png.decode_png(bytes(m.bytes))
+    assert np.array_equal(canvas, want)
+    gx, gy = gap[0] - 47439, gap[1] - 31441
+    assert not canvas[gy * 256 : (gy + 1) * 256, gx * 256 : (gx + 1) * 256].any()
+
+    # --tile-files and --pmtiles hold exactly the fetched tiles
+    files = {f.name: f.read_bytes() for f in (tiles_out / "files").glob("*.png")}
+    assert sorted(files) == sorted(f"16_{x}_{y}.png" for x, y in fetched_cells)
+    for (x, y), ps in payloads.items():
+        assert files[f"16_{x}_{y}.png"] in ps
+    got = read_pmtiles((tiles_out / "pmtiles" / "tiles.pmtiles").read_bytes())
+    assert got["tiles"] == {(16, x, y): max(ps) for (x, y), ps in payloads.items()}

@@ -255,6 +255,11 @@ def test_mosaic_stitches_palette_png_tile(spark):
     want = np.zeros((128, 128, 3), np.uint8)
     for r, (dx, dy) in zip(rows, ((0, 0), (1, 0), (0, 1), (1, 1))):
         want[dy * 64 : dy * 64 + 64, dx * 64 : dx * 64 + 64] = r.pop("_arr")
+    # a selected tile with no payload (how the CLI unions its selection
+    # into the mosaic) shares the first cell: it must sort next to the
+    # real rows without an image_id and change no pixel
+    rows.append({"geom_id": "g", "z": z, "x": x0, "y": y0,
+                 "bytes": None, "fmt": None, "image_id": None})
     df = spark.createDataFrame(
         pd.DataFrame(rows),
         "geom_id string, z int, x long, y long, bytes binary, fmt string, image_id string",

@@ -13,6 +13,16 @@ Deltas from the reference, by design:
   are anti-joined away via the metrics table.
 - ``--group-overlap`` is accepted and ignored exactly like the reference
   (parsed but never applied, SURVEY.md §8 Q3).
+
+Data flow: each stage runs once per request. The selected tiles take one
+inner, broadcast-tiles join against the image table; ``Engine.write``
+commits it as the fetch table and returns this run's committed rows.
+``--tile-files``, ``--pmtiles`` and the mosaic read those rows, the
+mosaic with the selected tiles unioned in as null-payload rows so its
+extent spans the whole selection (unfetched tiles render black). The
+format export (``--tiff/--cog/--jpg/--webp``) reads the rows the mosaic
+write returns. ``--mosaic-only`` skips the fetch-table write and
+mosaics the join directly.
 """
 
 from __future__ import annotations
@@ -117,49 +127,45 @@ def main(argv=None) -> int:
             print(f"tile plan written to {args.tiles_out}")
         return 0
 
-    joined = eng.fetch(tiles, args.images, how="left", resume=args.resume)
-    if not args.mosaic_only:
-        eng.write(
-            joined.filter(F.col("bytes").isNotNull()),
-            str(args.tiles_out),
-            stage="fetch",
-        )
-    if args.tile_files and not args.mosaic_only:
-        from tilegrab_spark.sources.export import export_tiles
+    # one fetch per request: the fetch-table commit is the only run of the
+    # join, and every later sink reads the committed rows back
+    fetched = eng.fetch(tiles, args.images, resume=args.resume)
+    if args.mosaic_only:
+        committed = fetched
+    else:
+        committed = eng.write(fetched, str(args.tiles_out), stage="fetch")
+        if args.tile_files:
+            from tilegrab_spark.sources.export import export_tiles
 
-        export_tiles(
-            joined.filter(F.col("bytes").isNotNull()),
-            args.tiles_out / "files",
-        )
-    if args.pmtiles and not args.mosaic_only:
-        from tilegrab_spark.sources.export import export_pmtiles
+            export_tiles(committed, args.tiles_out / "files")
+        if args.pmtiles:
+            from tilegrab_spark.sources.export import export_pmtiles
 
-        # a subdirectory (like --tile-files' files/) so the fetch
-        # table's parquet scan never sees a non-parquet root file
-        (args.tiles_out / "pmtiles").mkdir(parents=True, exist_ok=True)
-        export_pmtiles(
-            joined.filter(F.col("bytes").isNotNull()),
-            args.tiles_out / "pmtiles" / "tiles.pmtiles",
-        )
+            # a subdirectory (like --tile-files' files/) so the fetch
+            # table's parquet scan never sees a non-parquet root file
+            (args.tiles_out / "pmtiles").mkdir(parents=True, exist_ok=True)
+            export_pmtiles(committed, args.tiles_out / "pmtiles" / "tiles.pmtiles")
     if args.download_only:
         return 0
 
     gw = gh = None
     if args.group_tiles:
         gw, gh = (int(v) for v in args.group_tiles.lower().split("x"))
-    mosaics = eng.mosaic(joined, group_w=gw, group_h=gh)
+    # the selected tiles join as null-payload rows: they stretch the
+    # extent over the whole selection and render black where no image
+    # was fetched
+    mosaics = eng.mosaic(
+        committed.unionByName(tiles, allowMissingColumns=True), group_w=gw, group_h=gh
+    )
     if not (args.tiff or args.cog):
         mosaics = mosaics.drop("merc_xmin", "merc_ymin", "merc_xmax", "merc_ymax")
-    eng.write(mosaics, str(args.out / "mosaics"), stage="mosaic")
+    written = eng.write(mosaics, str(args.out / "mosaics"), stage="mosaic")
     if args.tiff or args.cog or args.jpg or args.webp or args.webp_lossy:
         # real image files next to the table (exporter.py:37-74):
         # georeferenced .tif or lossy .jpg per the format flag (.webp is
-        # an engine extension). Export reads the parquet just written —
-        # re-iterating the lazy `mosaics` plan would re-execute the
-        # whole join+stitch
+        # an engine extension), from this run's committed mosaics
         from tilegrab_spark.sources.export import export_mosaics
 
-        written = spark.read.parquet(str(args.out / "mosaics"))
         if args.cog:
             export_mosaics(written, args.out / "cog", fmt="cog")
         elif args.tiff:

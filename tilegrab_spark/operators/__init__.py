@@ -4,7 +4,7 @@ from tilegrab_spark.operators.tiles import (
     refine_by_shape,
     tiles_for,
 )
-from tilegrab_spark.operators.image_join import join_images, anti_join_committed
+from tilegrab_spark.operators.image_join import join_images
 from tilegrab_spark.operators.mosaic import mosaic, MOSAIC_SCHEMA
 from tilegrab_spark.operators.knn import knn_join
 from tilegrab_spark.operators.components import connected_components, dedup_by_components
@@ -306,7 +306,6 @@ __all__ = [
     "refine_by_shape",
     "tiles_for",
     "join_images",
-    "anti_join_committed",
     "mosaic",
     "MOSAIC_SCHEMA",
     "knn_join",

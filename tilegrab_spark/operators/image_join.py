@@ -1,13 +1,17 @@
 """J1: tiles ⋈ image table (the reference's load_images nested loop,
 images/loader.py:15-38, which is O(T×F)) re-expressed as a hash equi-join
-on the tile key — plus the resume anti-join (F5) and explicit skew
-salting for dense cells (north rule).
+on the tile key — plus explicit skew salting for dense cells (north
+rule). The resume anti-join (F5) is ``MetricsStore.resume_filter``.
 
 Join-strategy policy (SURVEY.md §2.4/§4):
 - ``broadcast_tiles=True`` (default for per-query tile sets bounded by
   safe_limit): broadcast-hash join — the 100 TB image table is scanned
   once, NO shuffle at all, and skewed cells cannot hurt because there is
-  no shuffle partitioning by key.
+  no shuffle partitioning by key. Only an inner join gets this plan: a
+  left outer join must keep every tile, so Spark cannot broadcast the
+  tile side and falls back to a sort-merge join that shuffles the whole
+  image table. Callers that need the unmatched tiles (the mosaic's
+  extent) union the tile set back in instead.
 - big tile sets: shuffled join on (z,x,y); AQE skew-join splits oversized
   partitions at runtime, and ``salt > 1`` adds explicit pre-salting —
   images get ``pmod(xxhash64(image_id), salt)``, tiles explode over
@@ -35,7 +39,9 @@ def join_images(
     ``how='inner'`` ≙ the reference's "first match wins" loader (every
     match is kept here — dedup to one row per tile is a downstream
     ``row_number`` if wanted); ``how='left'`` keeps un-stored tiles as
-    missing (they render black in the mosaic, mosaic.py:20).
+    missing (they render black in the mosaic, mosaic.py:20) at the cost
+    of a sort-merge join, since the broadcast hint cannot apply to the
+    preserved side.
     """
     t = tiles_df
     i = images_df
@@ -154,14 +160,3 @@ def first_match_per_tile(joined: DataFrame) -> DataFrame:
         .drop("_rn")
     )
 
-
-def anti_join_committed(work_df: DataFrame, committed_cells: DataFrame) -> DataFrame:
-    """F5 resume: drop work units whose cell_id is already committed in the
-    lineage/metrics table (the *intended* semantics of
-    ProgressStore.progress_by_tile, downloader/progress.py:166-172 — the
-    reference's own lookup never matches, SURVEY.md §8 Q2)."""
-    return work_df.join(
-        F.broadcast(committed_cells.select("cell_id").distinct()),
-        on="cell_id",
-        how="left_anti",
-    )

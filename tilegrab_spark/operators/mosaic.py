@@ -1,4 +1,4 @@
-"""A2/W1: the mosaic-stitch reducer — ``groupBy(mosaic key).applyInPandas``.
+"""A2/W1: the mosaic-stitch reducer — ``groupBy(mosaic key).applyInArrow``.
 
 Reference semantics re-expressed:
 - ``mosaic()`` (images/mosaic.py:7-27): canvas spans the min/max tile
@@ -6,7 +6,9 @@ Reference semantics re-expressed:
   ``((x-minx)*tw, (y-miny)*th)``, RGB, missing tiles black, overlap =
   last-paste-wins. Here the extent is an A1 aggregation
   (``groupBy.agg(min/max)``) broadcast-joined back, and paste order is
-  made deterministic by sorting (y, x, image_id) before pasting.
+  made deterministic by sorting (y, x, image_id) before pasting. Rows
+  with a null payload (selected tiles with no stored image) widen the
+  extent and are never pasted, so they render black.
 - ``group_image()`` (images/grouping.py:9-29): re-chunk the mosaic into
   gw×gh-tile groups, dropping all-zero groups (F7) and incomplete
   trailing windows (``sliding_window_view`` yields full windows only).
@@ -23,10 +25,8 @@ columns — the GeoTIFF sink is metadata, not a special operator.
 
 from __future__ import annotations
 
-from typing import Iterable
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -39,14 +39,17 @@ MOSAIC_SCHEMA = (
     "merc_xmin double, merc_ymin double, merc_xmax double, merc_ymax double"
 )
 
+# zlib level of the stitched canvas PNG
+PNG_LEVEL = 3
+
 
 def _stitch_core(
     key, xs, ys, datas, fmts, ids, *, tile_w: int, tile_h: int,
     group_w: int | None, group_h: int | None, drop_empty: bool,
-    png_level: int, stride_w: int | None = None, stride_h: int | None = None,
+    stride_w: int | None = None, stride_h: int | None = None,
 ) -> dict | None:
-    """Engine-agnostic stitch kernel over plain sequences; returns one
-    output row dict, or None for an all-zero dropped group (F7).
+    """Stitch kernel over plain sequences; returns one output row dict,
+    or None for an all-zero dropped group (F7).
 
     ``stride_w/stride_h`` place window origins at multiples of the stride
     (overlapping re-chunking, W2); default = group size (disjoint W1)."""
@@ -68,8 +71,9 @@ def _stitch_core(
     n = 0
     n_bad = 0
     # deterministic last-paste-wins order (reference order is iteration
-    # order, mosaic.py:22-25; we pin it)
-    for i in sorted(range(len(xs)), key=lambda i: (ys[i], xs[i], ids[i])):
+    # order, mosaic.py:22-25; we pin it). A null-payload row has no
+    # image_id and is skipped below, so it may sort anywhere in its cell
+    for i in sorted(range(len(xs)), key=lambda i: (ys[i], xs[i], ids[i] or "")):
         data = datas[i]
         if data is None:
             continue
@@ -120,7 +124,7 @@ def _stitch_core(
         "h": h,
         "n_tiles": n,
         "n_bad": n_bad,
-        "bytes": png.encode_png(canvas, filter_type=2, level=png_level),
+        "bytes": png.encode_png(canvas, filter_type=2, level=PNG_LEVEL),
         "merc_xmin": mx0,
         "merc_ymin": my0,
         "merc_xmax": mx1,
@@ -128,29 +132,7 @@ def _stitch_core(
     }
 
 
-def _stitch_group(
-    key, pdf: pd.DataFrame, *, tile_w: int, tile_h: int,
-    group_w: int | None, group_h: int | None, drop_empty: bool,
-    png_level: int, stride_w: int | None = None, stride_h: int | None = None,
-) -> pd.DataFrame:
-    row = _stitch_core(
-        key, pdf["x"].tolist(), pdf["y"].tolist(), pdf["bytes"].tolist(),
-        pdf["fmt"].tolist(), pdf["image_id"].tolist(),
-        tile_w=tile_w, tile_h=tile_h, group_w=group_w, group_h=group_h,
-        drop_empty=drop_empty, png_level=png_level,
-        stride_w=stride_w, stride_h=stride_h,
-    )
-    if row is None:
-        return pd.DataFrame(columns=_SCHEMA_COLS)
-    return pd.DataFrame([row])
-
-
-_SCHEMA_COLS = [s.split()[0] for s in MOSAIC_SCHEMA.split(", ")]
-
-
 def _mosaic_arrow_schema():
-    import pyarrow as pa
-
     types = {
         "string": pa.string(), "int": pa.int32(), "long": pa.int64(),
         "binary": pa.binary(), "double": pa.float64(),
@@ -176,10 +158,7 @@ def mosaic(
     tile_h: int = 256,
     drop_empty: bool = False,
     full_groups_only: bool = True,
-    png_level: int = 3,
     anchor: tuple | None = None,
-    num_partitions: int | None = None,
-    engine: str = "arrow",
     group_overlap: int = 0,
 ) -> DataFrame:
     """Stitch joined (tile, image) rows into mosaics.
@@ -273,48 +252,26 @@ def mosaic(
     # bench). Pin the stage's parallelism with an explicit repartition on
     # the group keys — groupBy reuses the compatible hash partitioning, so
     # this adds no extra shuffle, and AQE leaves user repartitions alone.
-    spark = joined.sparkSession
-    nparts = num_partitions or spark.sparkContext.defaultParallelism * 2
+    nparts = joined.sparkSession.sparkContext.defaultParallelism * 2
     df = df.repartition(nparts, "geom_id", "z", "gx", "gy")
 
     grouped = df.groupBy("geom_id", "z", "gx", "gy", "_ax", "_ay")
 
-    if engine == "arrow":
-        # Arrow-native grouped map: ~30% faster than the pandas path on
-        # the bench (skips per-group pandas construction entirely)
-        import pyarrow as pa
-        from typing import Tuple
-
-        def arrow_fn(key: Tuple, tbl: "pa.Table") -> "pa.Table":
-            k = tuple(v.as_py() if hasattr(v, "as_py") else v for v in key)
-            row = _stitch_core(
-                k,
-                tbl.column("x").to_pylist(),
-                tbl.column("y").to_pylist(),
-                tbl.column("bytes").to_pylist(),
-                tbl.column("fmt").to_pylist(),
-                tbl.column("image_id").to_pylist(),
-                tile_w=tile_w, tile_h=tile_h, group_w=group_w,
-                group_h=group_h, drop_empty=drop_empty, png_level=png_level,
-                stride_w=stride_w, stride_h=stride_h,
-            )
-            rows = [] if row is None else [row]
-            return pa.Table.from_pylist(rows, schema=_ARROW_SCHEMA)
-
-        return grouped.applyInArrow(arrow_fn, schema=MOSAIC_SCHEMA)
-
-    def apply_fn(key, pdf):
-        return _stitch_group(
-            key,
-            pdf,
-            tile_w=tile_w,
-            tile_h=tile_h,
-            group_w=group_w,
-            group_h=group_h,
-            drop_empty=drop_empty,
-            png_level=png_level,
-            stride_w=stride_w,
-            stride_h=stride_h,
+    # Arrow-native grouped map: no per-group pandas construction
+    def arrow_fn(key: tuple, tbl: pa.Table) -> pa.Table:
+        k = tuple(v.as_py() if hasattr(v, "as_py") else v for v in key)
+        row = _stitch_core(
+            k,
+            tbl.column("x").to_pylist(),
+            tbl.column("y").to_pylist(),
+            tbl.column("bytes").to_pylist(),
+            tbl.column("fmt").to_pylist(),
+            tbl.column("image_id").to_pylist(),
+            tile_w=tile_w, tile_h=tile_h, group_w=group_w,
+            group_h=group_h, drop_empty=drop_empty,
+            stride_w=stride_w, stride_h=stride_h,
         )
+        rows = [] if row is None else [row]
+        return pa.Table.from_pylist(rows, schema=_ARROW_SCHEMA)
 
-    return grouped.applyInPandas(apply_fn, schema=MOSAIC_SCHEMA)
+    return grouped.applyInArrow(arrow_fn, schema=MOSAIC_SCHEMA)

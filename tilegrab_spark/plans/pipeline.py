@@ -6,10 +6,12 @@ GeoDataset → TilesByShape → Downloader → mosaic → export flow
     tiles  = eng.tiles_for(geom, zoom=16, by="shape")        # J2 semi-join
     joined = eng.fetch(tiles, images_path)                    # J1 keyed fetch
     mosaics = eng.mosaic(joined, group_w=2)                   # A2/W1 reducer
-    eng.write(mosaics, out_path, stage="mosaic")              # sink + lineage
+    written = eng.write(mosaics, out_path, stage="mosaic")    # sink + lineage
 
-Every ``write`` commits data + per-cell lineage; re-running ``fetch`` with
-``resume=True`` anti-joins away committed cells (kill/resume story).
+Every ``write`` commits data + per-cell lineage and returns the committed
+rows of this run, so later sinks read the commit instead of re-running
+the plan; re-running ``fetch`` with ``resume=True`` anti-joins away
+committed cells (kill/resume story).
 """
 
 from __future__ import annotations
@@ -76,20 +78,15 @@ class Engine:
         *,
         how: str = "inner",
         resume: bool = False,
-        stage: str = "fetch",
-        salt: int = 1,
-        broadcast_tiles: bool = True,
     ) -> DataFrame:
         if isinstance(images, str):
             images = read_image_table(self.spark, images)
         if resume and self.metrics is not None:
-            tiles_df = self.metrics.resume_filter(tiles_df, stage)
+            tiles_df = self.metrics.resume_filter(tiles_df, "fetch")
         return join_images(
             tiles_df,
             images.drop("min_lon", "min_lat", "max_lon", "max_lat", "cell_id"),
             how=how,
-            broadcast_tiles=broadcast_tiles,
-            salt=salt,
         )
 
     # --- stage 3: stitch (E1 step 6) ---
@@ -134,9 +131,13 @@ class Engine:
         mode: str = "append",
         partition_by: tuple = (),
         bytes_col: str | None = "bytes",
-    ) -> None:
+    ) -> DataFrame:
         """Durable stage commit: data parquet first (its _SUCCESS is the
-        snapshot), then per-cell lineage to the metrics table."""
+        snapshot), then per-cell lineage to the metrics table.
+
+        Returns the committed rows of this run (a lazy read of ``path``
+        filtered to this run's ``_run_id``), so further sinks read the
+        commit instead of re-running ``df``'s plan."""
         out = df
         if "cell_id" not in out.columns:
             if {"z", "gx", "gy"} <= set(out.columns):
@@ -149,16 +150,17 @@ class Engine:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(path)
+        committed = self.spark.read.parquet(path).filter(
+            F.col("_run_id") == self.run_id
+        )
         if self.metrics is not None and "cell_id" in out.columns:
             # lineage from the COMMITTED files (this run's rows only) so a
             # crash between data write and metrics write under-reports,
             # never over-reports — resume then redoes, not skips, work.
-            committed = self.spark.read.parquet(path).filter(
-                F.col("_run_id") == self.run_id
-            )
             self.metrics.append_stage(
                 committed,
                 run_id=self.run_id,
                 stage=stage,
                 bytes_col=bytes_col if bytes_col in out.columns else None,
             )
+        return committed
