@@ -1,10 +1,40 @@
+import json
+import math
+
 import numpy as np
 import pytest
 
 from tilegrab_spark import get_spark
-from tilegrab_spark.sources.geometries import geometry_from_geojson, geometry_from_rings
+from tilegrab_spark.sources.geometries import geometry_from_rings
 
-T_GEOJSON = "/root/reference/tests/data/T.geojson"
+# The T fixture's EPSG:4326 bbox (FIXTURES.md §4.1) and its (bbox, shape,
+# invert) tile counts by zoom (FIXTURES.md §4.2).
+T_BBOX = (80.59111369868114, 7.253238366601672, 80.60679900129578, 7.267703227740267)
+T_COUNTS = {12: (2, 2, 0), 14: (4, 3, 1), 15: (9, 5, 4), 16: (16, 7, 9)}
+
+
+def _t_ring() -> list:
+    """A T-shaped [lon, lat] ring standing in for the reference's T
+    polygon, which is reference test data not kept in this repository.
+    It has the recorded bbox, a bar across the top z=16 tile row and a
+    stem inside tile column 47440 (x 47440.1-47440.9), so it selects the
+    recorded tile sets and, like the real T, has fully interior z=18
+    tiles in its stem."""
+    w, s, e, n = T_BBOX
+    nn = 2.0 ** 16
+
+    def lon(tx):
+        return tx / nn * 360.0 - 180.0
+
+    def lat(ty):
+        return math.degrees(math.atan(math.sinh(math.pi * (1.0 - 2.0 * ty / nn))))
+
+    bar, sw, se = lat(31441.5), lon(47440.1), lon(47440.9)
+    pts = [(w, n), (e, n), (e, bar), (se, bar), (se, s), (sw, s), (sw, bar), (w, bar)]
+    return pts + pts[:1]
+
+
+T_RING = _t_ring()
 
 # Golden tile sets for the T fixture, derived from the reference's own
 # formulas (FIXTURES.md §4.2) and reproduced by kernels validated against
@@ -37,7 +67,13 @@ def spark():
         app_name="tilegrab-spark-tests",
         master="local[4]",
         shuffle_partitions=4,
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
+        extra_conf={
+            "spark.ui.showConsoleProgress": "false",
+            # no Python call-site capture per Column call (several py4j
+            # round trips and a stack walk each); it only adds context
+            # to error messages
+            "spark.python.sql.dataFrameDebugging.enabled": "false",
+        },
     )
     yield s
     s.stop()
@@ -45,7 +81,16 @@ def spark():
 
 @pytest.fixture(scope="session")
 def t_geom():
-    return geometry_from_geojson(T_GEOJSON, "T")
+    return geometry_from_rings("T", [T_RING])
+
+
+@pytest.fixture(scope="session")
+def t_geojson(tmp_path_factory):
+    """The T ring as a GeoJSON file (EPSG:4326), e.g. a CLI ``--source``."""
+    path = tmp_path_factory.mktemp("t") / "T.geojson"
+    geometry = {"type": "Polygon", "coordinates": [[list(p) for p in T_RING]]}
+    path.write_text(json.dumps({"type": "Feature", "properties": {}, "geometry": geometry}))
+    return path
 
 
 @pytest.fixture(scope="session")

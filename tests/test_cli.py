@@ -26,15 +26,30 @@ def test_mutually_exclusive_groups():
         parse_args(["--source", "s", "--shape", "--osm", "--png", "--tiff", "--zoom", "1"])
 
 
-def test_cli_end_to_end(spark, image_table, tmp_path):
+def test_cli_end_to_end(spark, image_table, t_geojson, tmp_path, monkeypatch):
+    import os
+
+    from tilegrab_spark.operators import tiles as tiles_op
+
+    # the request evaluates the shape predicate once, in this (driver)
+    # process: the fetch and the mosaic read the same selected rows
+    calls = []
+    shape_mask = tiles_op.shape_mask
+
+    def counted(*args, **kwargs):
+        calls.append(os.getpid())
+        return shape_mask(*args, **kwargs)
+
+    monkeypatch.setattr(tiles_op, "shape_mask", counted)
     # reuses the session via getOrCreate inside main()
     rc = main(
-        ["--source", "/root/reference/tests/data/T.geojson", "--shape", "--osm",
+        ["--source", str(t_geojson), "--shape", "--osm",
          "--zoom", "16", "--images", image_table,
          "--tiles-out", str(tmp_path / "tiles"), "--out", str(tmp_path / "out"),
          "--tiff", "--quiet"]
     )
     assert rc == 0
+    assert calls == [os.getpid()]
     m = spark.read.parquet(str(tmp_path / "out" / "mosaics"))
     r = m.collect()[0]
     assert (r.w, r.h) == (1024, 1024)
@@ -47,7 +62,7 @@ def test_cli_end_to_end(spark, image_table, tmp_path):
     assert {x.stage for x in met.collect()} == {"fetch", "mosaic"}
 
 
-def test_cli_webp_export(spark, image_table, tmp_path):
+def test_cli_webp_export(spark, image_table, t_geojson, tmp_path):
     """--webp (engine extension): the exported VP8L mosaic decodes
     byte-equal to the PNG canvas in the parquet table."""
     import numpy as np
@@ -55,7 +70,7 @@ def test_cli_webp_export(spark, image_table, tmp_path):
     from tilegrab_spark.kernels import png, webp
 
     rc = main(
-        ["--source", "/root/reference/tests/data/T.geojson", "--shape", "--osm",
+        ["--source", str(t_geojson), "--shape", "--osm",
          "--zoom", "16", "--images", image_table,
          "--tiles-out", str(tmp_path / "tiles"), "--out", str(tmp_path / "out"),
          "--webp", "--quiet"]
@@ -99,13 +114,13 @@ def test_cli_quickstart_shapefile_artifact_parity(spark, image_table, tmp_path):
     files = sorted((tmp_path / "tiles" / "files").glob("*.png"))
     golden = sorted(f"16_{x}_{y}.png" for x, y in T_SHAPE_Z16)
     assert [f.name for f in files] == golden
-    hot = (47440, 31441)
     for f in files:
         z, x, y = (int(v) for v in f.stem.split("_"))
-        if (x, y) == hot:
-            continue  # hot cell: 40 src variants share the filename
+        # the hot cell stores srcs 0 and 100-139; its file holds the
+        # greatest image_id, like the mosaic
+        src = 139 if (x, y) == (47440, 31441) else 0
         assert np.array_equal(
-            png.decode_png(f.read_bytes()), expected_pixels(f"16_{x}_{y}_0")
+            png.decode_png(f.read_bytes()), expected_pixels(f"16_{x}_{y}_{src}")
         )
 
     # 2) mosaic canvas: whole-extent 1024x1024
@@ -125,14 +140,14 @@ def test_cli_quickstart_shapefile_artifact_parity(spark, image_table, tmp_path):
     )
 
 
-def test_cli_pmtiles_archive(spark, image_table, tmp_path):
+def test_cli_pmtiles_archive(spark, image_table, t_geojson, tmp_path):
     """--pmtiles packs the fetched tiles into one Hilbert-clustered
-    archive whose contents match the per-tile files byte-for-byte."""
-    from tests.conftest import T_GEOJSON, T_SHAPE_Z16
+    archive whose contents match the fetch table byte-for-byte."""
+    from tests.conftest import T_SHAPE_Z16
     from tilegrab_spark.kernels.pmtiles import read_pmtiles
 
     rc = main(
-        ["--source", str(T_GEOJSON), "--shape", "--osm", "--zoom", "16",
+        ["--source", str(t_geojson), "--shape", "--osm", "--zoom", "16",
          "--images", image_table, "--pmtiles", "--download-only",
          "--tiles-out", str(tmp_path / "tiles"), "--quiet"]
     )
@@ -142,40 +157,16 @@ def test_cli_pmtiles_archive(spark, image_table, tmp_path):
     )
     assert set(got["tiles"]) == {(16, x, y) for x, y in T_SHAPE_Z16}
     assert got["header"]["clustered"] is True
-    # payloads are the fetch table's bytes; a tile fetched under two
-    # geometries keeps the deterministic max(bytes) payload
+    # payloads are the fetch table's bytes; a tile stored as several
+    # revisions keeps its greatest image_id's payload
     fetched: dict = {}
-    for r in spark.read.parquet(str(tmp_path / "tiles")).collect():
-        if r.bytes is None:
-            continue
-        k = (r.z, r.x, r.y)
-        b = bytes(r.bytes)
-        fetched[k] = max(fetched[k], b) if k in fetched else b
+    for r in sorted(spark.read.parquet(str(tmp_path / "tiles")).collect(),
+                    key=lambda r: r.image_id):
+        fetched[(r.z, r.x, r.y)] = bytes(r.bytes)
     assert got["tiles"] == fetched
 
 
-def _t_geojson(path, z=16):
-    """A T-shaped polygon in z=16 tile coordinates: a bar across the top
-    tile row 31441 (columns 47439..47442) and a stem down tile column
-    47440 to row 31444, kept off tile edges so each tile is in or out."""
-    import json
-    import math
-
-    n = 2.0 ** z
-
-    def lonlat(tx, ty):
-        lat = math.degrees(math.atan(math.sinh(math.pi * (1.0 - 2.0 * ty / n))))
-        return [tx / n * 360.0 - 180.0, lat]
-
-    pts = [(47439.3, 31441.3), (47442.7, 31441.3), (47442.7, 31441.6),
-           (47440.7, 31441.6), (47440.7, 31444.7), (47440.3, 31444.7),
-           (47440.3, 31441.6), (47439.3, 31441.6)]
-    ring = [lonlat(*p) for p in pts + pts[:1]]
-    path.write_text(json.dumps({"type": "Feature", "properties": {},
-                                "geometry": {"type": "Polygon", "coordinates": [ring]}}))
-
-
-def test_cli_one_fetch_feeds_every_sink(spark, tmp_path, monkeypatch):
+def test_cli_one_fetch_feeds_every_sink(spark, t_geojson, tmp_path, monkeypatch):
     """A self-contained CLI run: the fetch table, --tile-files, --pmtiles
     and the mosaic all come from one inner broadcast fetch. The image
     table lacks the selection's whole bottom row, so the mosaic extent
@@ -192,8 +183,6 @@ def test_cli_one_fetch_feeds_every_sink(spark, tmp_path, monkeypatch):
         write_synthetic_image_table,
     )
 
-    src = tmp_path / "t.geojson"
-    _t_geojson(src)
     images = str(tmp_path / "images")
     bottom = max(y for _, y in T_BBOX_Z16)
     cells = cells_for_tile_sets(
@@ -226,7 +215,7 @@ def test_cli_one_fetch_feeds_every_sink(spark, tmp_path, monkeypatch):
     spark.conf.set(key, "-1")
     try:
         rc = main(
-            ["--source", str(src), "--shape", "--zoom", "16", "--images", images,
+            ["--source", str(t_geojson), "--shape", "--zoom", "16", "--images", images,
              "--png", "--tile-files", "--pmtiles",
              "--tiles-out", str(tiles_out), "--out", str(out), "--quiet"]
         )
@@ -244,7 +233,7 @@ def test_cli_one_fetch_feeds_every_sink(spark, tmp_path, monkeypatch):
     )
     payloads: dict = {}
     for r in rows:
-        payloads.setdefault((r.x, r.y), []).append(bytes(r.bytes))
+        payloads.setdefault((r.x, r.y), {})[r.image_id] = bytes(r.bytes)
 
     # mosaic: the extent spans the whole selection, gap row included
     (m,) = spark.read.parquet(str(out / "mosaics")).collect()
@@ -261,10 +250,54 @@ def test_cli_one_fetch_feeds_every_sink(spark, tmp_path, monkeypatch):
     gx, gy = gap[0] - 47439, gap[1] - 31441
     assert not canvas[gy * 256 : (gy + 1) * 256, gx * 256 : (gx + 1) * 256].any()
 
-    # --tile-files and --pmtiles hold exactly the fetched tiles
+    # --tile-files and --pmtiles hold exactly the fetched tiles, each as
+    # the revision the mosaic shows: its greatest image_id
+    top = {(16, x, y): payloads[(x, y)][max(stored[(x, y)])] for x, y in fetched_cells}
     files = {f.name: f.read_bytes() for f in (tiles_out / "files").glob("*.png")}
-    assert sorted(files) == sorted(f"16_{x}_{y}.png" for x, y in fetched_cells)
-    for (x, y), ps in payloads.items():
-        assert files[f"16_{x}_{y}.png"] in ps
+    assert files == {f"{z}_{x}_{y}.png": b for (z, x, y), b in top.items()}
     got = read_pmtiles((tiles_out / "pmtiles" / "tiles.pmtiles").read_bytes())
-    assert got["tiles"] == {(16, x, y): max(ps) for (x, y), ps in payloads.items()}
+    assert got["tiles"] == top
+
+
+def test_cli_resume_mosaic_shows_earlier_cells(spark, image_table, t_geojson, tmp_path):
+    """Under --resume, the T shape and then its bbox into one --out: the
+    second run fetches only the cells the first did not commit, and its
+    mosaic still shows the first run's cells."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from tests.conftest import T_BBOX_Z16, T_SHAPE_Z16
+    from tilegrab_spark.kernels import png
+    from tilegrab_spark.sources.images import expected_pixels
+
+    tiles_out, mosaics = tmp_path / "tiles", str(tmp_path / "out" / "mosaics")
+
+    def run(extent):
+        return main(
+            ["--source", str(t_geojson), extent, "--zoom", "16", "--images", image_table,
+             "--resume", "--png", "--tiles-out", str(tiles_out),
+             "--out", str(tmp_path / "out"), "--quiet"]
+        )
+
+    assert run("--shape") == 0
+    first = [r._run_id for r in spark.read.parquet(mosaics).collect()]
+    assert run("--bbox") == 0
+
+    # the image table lacks one bbox cell and stores srcs 0 and 100-139
+    # for the hot cell
+    gap, hot = (47441, 31442), (47440, 31441)
+    stored = [c for c in T_BBOX_Z16 if c != gap]
+    second = spark.read.parquet(str(tiles_out)).filter(~F.col("_run_id").isin(*first))
+    assert {(r.x, r.y) for r in second.collect()} == set(stored) - set(T_SHAPE_Z16)
+
+    (m,) = spark.read.parquet(mosaics).filter(~F.col("_run_id").isin(*first)).collect()
+    assert (m.tminx, m.tminy, m.tmaxx, m.tmaxy) == (47439, 31441, 47442, 31444)
+    assert m.n_tiles == len(stored) + 40
+    want = np.zeros((1024, 1024, 3), np.uint8)
+    for x, y in stored:
+        src = 139 if (x, y) == hot else 0
+        want[(y - 31441) * 256 : (y - 31440) * 256, (x - 47439) * 256 : (x - 47438) * 256] = (
+            expected_pixels(f"16_{x}_{y}_{src}")
+        )
+    assert np.array_equal(png.decode_png(bytes(m.bytes)), want)
+

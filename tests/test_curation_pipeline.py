@@ -40,7 +40,10 @@ def test_curation_pipeline_end_to_end(spark, docs):
         batch, sketch, "doc_id", m_bits=M, k_hashes=K
     ).filter("maybe_present").drop("maybe_present")
     verified = maybe.join(history.select("doc_id"), "doc_id", "left_anti")
-    new = fresh_fast.unionByName(verified)
+    # stored once, as an ingest stores each stage's output: every later
+    # stage reads it several times, and re-planning the bloom stage under
+    # each read multiplies the plan size
+    new = fresh_fast.unionByName(verified).localCheckpoint()
     got_ids = {r.doc_id for r in new.select("doc_id").collect()}
     want_ids = {
         r.doc_id for r in docs.filter(F.col("doc_id") % 3 != 0).collect()

@@ -357,18 +357,34 @@ def test_geohash_documented_examples(spark):
 def test_geohash_matches_reference_and_decodes(spark, pts):
     from tilegrab_spark.functions.interop import geohash_col, geohash_decode_cols
 
-    df = spark.createDataFrame(pts, "lon double, lat double, p int")
-    for lon, lat, p in pts:
-        one = spark.createDataFrame([(lon, lat)], "lon double, lat double")
-        r = one.select(geohash_col(F.col("lon"), F.col("lat"), p).alias("gh")).collect()[0]
-        assert r.gh == _ref_geohash(lon, lat, p), (lon, lat, p)
-        dlon, dlat = geohash_decode_cols(F.lit(r.gh))
-        d = one.select(dlon.alias("lon"), dlat.alias("lat")).collect()[0]
+    # one query encodes every point (a column per distinct precision),
+    # one more decodes every hash
+    df = spark.createDataFrame(
+        [(i, lon, lat) for i, (lon, lat, _) in enumerate(pts)], "i int, lon double, lat double"
+    )
+    precisions = sorted({p for _, _, p in pts})
+    enc = {
+        r.i: r
+        for r in df.select(
+            "i", *[geohash_col(F.col("lon"), F.col("lat"), p).alias(f"gh{p}") for p in precisions]
+        ).collect()
+    }
+    hashes = [enc[i][f"gh{p}"] for i, (_, _, p) in enumerate(pts)]
+    for (lon, lat, p), gh in zip(pts, hashes):
+        assert gh == _ref_geohash(lon, lat, p), (lon, lat, p)
+    dlon, dlat = geohash_decode_cols(F.col("gh"))
+    dec = {
+        r.i: r
+        for r in spark.createDataFrame(list(enumerate(hashes)), "i int, gh string")
+        .select("i", dlon.alias("lon"), dlat.alias("lat"))
+        .collect()
+    }
+    for i, (lon, lat, p) in enumerate(pts):
         # center of the cell: within half a cell of the input
         lon_bits = (5 * p + 1) // 2
         lat_bits = (5 * p) // 2
-        assert abs(d.lon - lon) <= 360.0 / (1 << lon_bits) / 2 + 1e-9
-        assert abs(d.lat - lat) <= 180.0 / (1 << lat_bits) / 2 + 1e-9
+        assert abs(dec[i].lon - lon) <= 360.0 / (1 << lon_bits) / 2 + 1e-9
+        assert abs(dec[i].lat - lat) <= 180.0 / (1 << lat_bits) / 2 + 1e-9
 
 
 def test_geohash_null_and_validation(spark):

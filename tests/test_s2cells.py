@@ -222,12 +222,22 @@ def test_cover_excludes_far_outside_and_caps_ranges():
     assert out == 0
 
 
+def _stored_cells(spark, pts):
+    """(pid, lon, lat, cell) with the level-18 cells computed once and
+    stored, as in an s2-clustered table. Over a column computed in the
+    same plan, the optimizer inlines the whole cell expression into
+    every BETWEEN bound of a range predicate."""
+    return (
+        spark.createDataFrame(pts, "pid long, lon double, lat double")
+        .withColumn("cell", s2_cell_col(F.col("lon"), F.col("lat"), 18))
+        .localCheckpoint()
+    )
+
+
 def test_cover_predicate_matches_python_membership(spark):
     random.seed(31)
     pts = [(i, random.uniform(-40, 40), random.uniform(20, 70)) for i in range(2000)]
-    df = spark.createDataFrame(pts, "pid long, lon double, lat double").withColumn(
-        "cell", s2_cell_col(F.col("lon"), F.col("lat"), 18)
-    )
+    df = _stored_cells(spark, pts)
     box = (-10.0, 40.0, 20.0, 55.0)
     ranges = s2_ranges_for_bbox(*box, max_level=10)
     got = {
@@ -331,9 +341,7 @@ def test_cap_never_loses_inside_points():
 def test_cap_predicate_and_validation(spark):
     random.seed(43)
     pts = [(i, random.uniform(-20, 30), random.uniform(30, 65)) for i in range(1500)]
-    df = spark.createDataFrame(pts, "pid long, lon double, lat double").withColumn(
-        "cell", s2_cell_col(F.col("lon"), F.col("lat"), 18)
-    )
+    df = _stored_cells(spark, pts)
     clon, clat, rad = 5.0, 47.0, 400_000.0
     got = {
         r.pid

@@ -1,19 +1,128 @@
 """Tile-selection operator parity (F1-F4, J2/J3, L1, set algebra §2.8)."""
 
+import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_RING, T_BBOX_Z16, T_SHAPE_Z15, T_SHAPE_Z16
+from tests.conftest import (
+    SF_RING,
+    T_BBOX,
+    T_BBOX_Z16,
+    T_COUNTS,
+    T_RING,
+    T_SHAPE_Z15,
+    T_SHAPE_Z16,
+)
+from tilegrab_spark.kernels import geo
 from tilegrab_spark.operators.tiles import (
     enumerate_tiles,
     enumerate_tiles_for_geoms,
     refine_by_shape,
     tiles_for,
 )
-from tilegrab_spark.sources.geometries import geometries_df, geometry_from_rings
+from tilegrab_spark.sources.geometries import (
+    GeometrySet,
+    geometries_df,
+    geometry_from_rings,
+)
 
 
 def xyset(df):
     return set((r.x, r.y) for r in df.select("x", "y").collect())
+
+
+def test_t_ring_reproduces_recorded_sets():
+    """The T ring against FIXTURES.md §4.1-4.2: its bbox, every
+    (bbox, shape, invert) count by zoom and every recorded set, from the
+    numpy kernels alone."""
+    assert geometry_from_rings("T", [T_RING]).bbox == T_BBOX
+    sets = {}
+    for z in T_COUNTS:
+        x0, x1, y0, y1 = geo.bbox_tile_range(*T_BBOX, z)
+        cells = [(x, y) for x in range(x0, x1 + 1) for y in range(y0, y1 + 1)]
+        xs, ys = np.array(cells, dtype=np.int64).T
+        hit = geo.boxes_intersect_polygons(*geo.tile_bounds(xs, ys, z), [[np.array(T_RING)]])
+        shape = [c for c, h in zip(cells, hit) if h]
+        invert = [c for c, h in zip(cells, hit) if not h]
+        sets[z] = (cells, shape, invert)
+        assert (len(cells), len(shape), len(invert)) == T_COUNTS[z], z
+    assert sets[14][0] == [(11859, 7860), (11859, 7861), (11860, 7860), (11860, 7861)]
+    assert sets[15][1] == T_SHAPE_Z15
+    assert sets[16][0] == T_BBOX_Z16
+    assert sets[16][1] == T_SHAPE_Z16
+    assert sets[16][2] == sorted(set(T_BBOX_Z16) - set(T_SHAPE_Z16))
+
+
+def _random_geom(rng, gid, n_polys):
+    """``n_polys`` random star-shaped polygons near one point; the first
+    may carry a hole."""
+    lon0, lat0 = rng.uniform(-150, 150), rng.uniform(-60, 60)
+    polys = []
+    for _ in range(n_polys):
+        cx, cy = lon0 + rng.uniform(-0.06, 0.06), lat0 + rng.uniform(-0.06, 0.06)
+        k = int(rng.integers(3, 9))
+        ang = np.sort(rng.uniform(0, 2 * np.pi, k))
+        rad = rng.uniform(0.005, 0.04, k)
+        outer = np.column_stack([cx + rad * np.cos(ang), cy + rad * np.sin(ang)])
+        rings = [outer]
+        if not polys and rng.random() < 0.5:
+            r = 0.3 * rad.min()
+            rings.append(np.array([[cx - r, cy - r], [cx + r, cy - r], [cx + r, cy + r],
+                                   [cx - r, cy + r]]))
+        polys.append(rings)
+    return GeometrySet(geom_id=gid, polygons=polys)
+
+
+def test_tiles_for_matches_distributed_refine(spark):
+    """Seeded property: the driver selection equals the distributed
+    operators' rows ordered by (x, y) and limited — every column, same
+    schema — for Polygons and MultiPolygons, both ``invert`` values, with
+    and without a buffer, and several ``safe_limit`` values."""
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
+
+    rng = np.random.default_rng(20261019)
+    cases = [(_random_geom(rng, f"g{i}", n), int(rng.integers(14, 17)))
+             for i, n in enumerate((1, 1, 2, 3))]
+    geoms = [g for g, _ in cases]
+    for invert in (False, True):
+        for buffer_m in (0.0, float(rng.uniform(50, 800))):
+            # one distributed job per (invert, buffer_m) for all geometries
+            ref = refine_by_shape(
+                reduce(DataFrame.unionByName,
+                       [enumerate_tiles(spark, g, z, buffer_m=buffer_m) for g, z in cases]),
+                geoms, invert=invert, buffer_m=buffer_m,
+            )
+            rows = ref.orderBy("geom_id", "x", "y").collect()
+            for geom, zoom in cases:
+                want = [r for r in rows if r.geom_id == geom.geom_id]
+                for limit in (None, 0, 1, int(rng.integers(2, 40))):
+                    got = tiles_for(spark, geom, zoom, invert=invert,
+                                    safe_limit=limit, buffer_m=buffer_m)
+                    case = (geom.geom_id, zoom, invert, buffer_m, limit)
+                    assert got.schema == ref.schema, case
+                    assert got.collect() == want[:limit], case
+
+
+def test_tiles_for_plans_as_a_local_relation(spark, t_geom):
+    """No Python evaluation, global sort or range enumeration: the
+    selection is already made when the plan is built."""
+    for kw in ({}, {"invert": True}, {"by": "bbox", "safe_limit": None},
+               {"buffer_m": 300.0, "safe_limit": 5}, {"safe_limit": 0}):
+        plan = tiles_for(spark, t_geom, 16, **kw)._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan, kw
+        for node in ("ArrowEvalPython", "BatchEvalPython", "TakeOrderedAndProject", "Range"):
+            assert node not in plan, (kw, node)
+
+
+def test_tiles_for_validates_arguments(spark, t_geom):
+    with pytest.raises(ValueError):
+        tiles_for(spark, t_geom, 16, by="hull")
+    with pytest.raises(ValueError):
+        tiles_for(spark, t_geom, 16, safe_limit=-1)
+    with pytest.raises(ValueError):
+        tiles_for(spark, t_geom, 16, buffer_m=-1.0)
 
 
 def test_bbox_enumeration_golden(spark, t_geom):

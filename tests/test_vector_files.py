@@ -3,15 +3,14 @@ shp/gpkg/geojson, dataset.py:80-88): fixtures are built byte-by-byte in
 the test from the SAME T polygon as the GeoJSON goldens, so all three
 formats must select the identical golden tile set."""
 
-import json
-import math
 import sqlite3
 import struct
 
 import numpy as np
 import pytest
 
-from tests.conftest import T_GEOJSON, T_SHAPE_Z16
+from tests.conftest import T_RING, T_SHAPE_Z16
+from tilegrab_spark.kernels import geo
 from tilegrab_spark.operators.tiles import tiles_for
 from tilegrab_spark.sources.vector_files import (
     geometry_from_file,
@@ -19,7 +18,8 @@ from tilegrab_spark.sources.vector_files import (
     geometry_from_shapefile,
 )
 
-# the T fixture is EPSG:3857 (its GeoJSON declares urn:ogc:def:crs:EPSG::3857)
+# the reference's T fixture is EPSG:3857 (its GeoJSON declares
+# urn:ogc:def:crs:EPSG::3857); the files here carry the T ring likewise
 MERC_PRJ = (
     'PROJCS["WGS_1984_Web_Mercator_Auxiliary_Sphere",GEOGCS["GCS_WGS_1984",'
     'DATUM["D_WGS_1984",SPHEROID["WGS_1984",6378137,298.257223563]],'
@@ -30,15 +30,9 @@ MERC_PRJ = (
 
 
 def _t_ring() -> np.ndarray:
-    geom = json.load(open(T_GEOJSON))
-    g = geom["features"][0]["geometry"]
-    coords = g["coordinates"]
-    if g["type"] == "MultiPolygon":
-        coords = coords[0]
-    ring = np.asarray(coords[0], dtype=np.float64)
-    if ring.shape[1] > 2:
-        ring = ring[:, :2]
-    return ring
+    """The T ring in EPSG:3857."""
+    lonlat = np.asarray(T_RING, dtype=np.float64)
+    return np.column_stack(geo.lonlat_to_mercator(lonlat[:, 0], lonlat[:, 1]))
 
 
 def _write_shp(path, ring: np.ndarray):
@@ -126,11 +120,8 @@ def test_geopackage_3857_normalizes_and_matches_golden(spark, tmp_path):
     _write_gpkg(gpkg, ring, 3857)
     geom = geometry_from_geopackage(gpkg, "T")
     assert geom.original_epsg == 3857 and geom.current_epsg == 4326
-    # normalized ring equals the GeoJSON loader's normalized ring
-    from tilegrab_spark.sources.geometries import geometry_from_geojson
-
-    ref = geometry_from_geojson(T_GEOJSON, "T")
-    np.testing.assert_allclose(geom.polygons[0][0], ref.polygons[0][0], atol=1e-12)
+    # the normalized ring is the T ring the file was projected from
+    np.testing.assert_allclose(geom.polygons[0][0], np.asarray(T_RING), atol=1e-12)
     got = sorted((r.x, r.y) for r in tiles_for(spark, geom, 16, by="shape").collect())
     assert got == sorted(T_SHAPE_Z16)
 

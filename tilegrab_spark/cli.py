@@ -14,15 +14,19 @@ Deltas from the reference, by design:
 - ``--group-overlap`` is accepted and ignored exactly like the reference
   (parsed but never applied, SURVEY.md §8 Q3).
 
-Data flow: each stage runs once per request. The selected tiles take one
-inner, broadcast-tiles join against the image table; ``Engine.write``
-commits it as the fetch table and returns this run's committed rows.
-``--tile-files``, ``--pmtiles`` and the mosaic read those rows, the
-mosaic with the selected tiles unioned in as null-payload rows so its
-extent spans the whole selection (unfetched tiles render black). The
-format export (``--tiff/--cog/--jpg/--webp``) reads the rows the mosaic
-write returns. ``--mosaic-only`` skips the fetch-table write and
-mosaics the join directly.
+Data flow: each stage runs once per request. The tile selection is a
+local relation made on the driver. The selected tiles take one inner,
+broadcast-tiles join against the image table; ``Engine.write`` commits it
+as the fetch table and returns this run's committed rows.
+``--tile-files`` and ``--pmtiles`` read one row per cell from those rows:
+its greatest ``image_id``, the revision the mosaic pastes last. The
+mosaic reads every committed revision, with the selected tiles unioned
+in as null-payload rows so its extent spans the whole selection
+(unfetched tiles render black); under ``--resume`` it reads the fetch
+table's rows of every selected cell, so cells committed by earlier runs
+show too. The format export (``--tiff/--cog/--jpg/--webp``) reads the
+rows the mosaic write returns. ``--mosaic-only`` skips the fetch-table
+write and mosaics the join directly.
 """
 
 from __future__ import annotations
@@ -122,7 +126,7 @@ def main(argv=None) -> int:
 
     if args.images is None:
         # plan-only mode: write the selected tile set (with URLs)
-        eng.write(tiles, str(args.tiles_out), stage="plan", bytes_col=None)
+        eng.write(tiles, str(args.tiles_out), stage="plan")
         if not args.quiet:
             print(f"tile plan written to {args.tiles_out}")
         return 0
@@ -134,17 +138,32 @@ def main(argv=None) -> int:
         committed = fetched
     else:
         committed = eng.write(fetched, str(args.tiles_out), stage="fetch")
+        # one visible revision per cell in the tile sinks: the greatest
+        # image_id, the one the mosaic pastes last
+        latest = (
+            committed.groupBy("z", "x", "y")
+            .agg(F.max_by(F.struct("bytes", "fmt"), "image_id").alias("r"))
+            .select("z", "x", "y", "r.*")
+        )
         if args.tile_files:
             from tilegrab_spark.sources.export import export_tiles
 
-            export_tiles(committed, args.tiles_out / "files")
+            export_tiles(latest, args.tiles_out / "files")
         if args.pmtiles:
             from tilegrab_spark.sources.export import export_pmtiles
 
             # a subdirectory (like --tile-files' files/) so the fetch
             # table's parquet scan never sees a non-parquet root file
             (args.tiles_out / "pmtiles").mkdir(parents=True, exist_ok=True)
-            export_pmtiles(committed, args.tiles_out / "pmtiles" / "tiles.pmtiles")
+            export_pmtiles(latest, args.tiles_out / "pmtiles" / "tiles.pmtiles")
+        if args.resume:
+            # cells committed by earlier runs render too: every committed
+            # revision of the selected cells, this run's included
+            committed = (
+                spark.read.parquet(str(args.tiles_out))
+                .join(tiles.select("z", "x", "y"), ["z", "x", "y"], "left_semi")
+                .dropDuplicates(["z", "x", "y", "image_id"])
+            )
     if args.download_only:
         return 0
 

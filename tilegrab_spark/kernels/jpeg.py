@@ -390,7 +390,9 @@ class _BitReader:
                     byte = None
             if byte is None:
                 break
-            self.acc = (self.acc << 8) | byte
+            # keep only the unread bits: an unmasked accumulator would
+            # grow to the whole scan and make every shift O(scan size)
+            self.acc = ((self.acc & ((1 << self.n) - 1)) << 8) | byte
             self.n += 8
 
     def bit(self) -> int:

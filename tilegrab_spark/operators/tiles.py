@@ -1,24 +1,30 @@
 """Tile enumeration + spatial semi/anti join (F1/F4/F2/F3/J2/J3/L1).
 
-The reference materializes ``List[Tile]`` eagerly in a driver loop
-(tiles/collection.py:119-152). Here enumeration is a lazy DataFrame:
+A request's selection (``tiles_for``) is the reference's small driver
+step (tiles/collection.py:119-152), done as one vectorized numpy pass:
+the bbox tile range in x-major, y-minor generation order
+(collection.py:141-143), masked by the exact box-vs-ring kernel (F2,
+collection.py:144-150; inversion F3 negates it), cut to the
+``safe_limit`` prefix (L1, collection.py:56-59). The result is a local
+relation: every consumer (fetch broadcast, mosaic extent) reads the same
+rows, and no Spark job runs to select them.
 
-- one geometry: ``spark.range(n_tiles)`` mapped to (x, y) in the
-  reference's x-major, y-minor generation order (collection.py:141-143) —
-  order matters for ``safe_limit`` parity (L1, collection.py:56-59);
-- many geometries: bbox corners -> Catalyst cell-encode -> ``sequence`` +
-  two ``explode``s, fully distributed, no driver loop at all.
+The distributed operators serve many geometries and unbounded sets:
 
-The exact tile∩geometry refine (F2, collection.py:144-150) is the only
-Python in the plan: an Arrow-batched pandas UDF running the vectorized
-box-vs-ring kernel against the *broadcast* geometry set — the north
-rule's "point-in-polygon on prepared geometry broadcast". Inversion (F3)
-is the same predicate negated (anti-join semantics).
+- ``enumerate_tiles``: one geometry's bbox as ``spark.range`` mapped to
+  (x, y) in generation order;
+- ``enumerate_tiles_for_geoms``: bbox corners -> Catalyst cell-encode ->
+  ``sequence`` + two ``explode``s, no driver loop at all;
+- ``refine_by_shape``: an Arrow-batched pandas UDF running the same
+  box-vs-ring predicate (``shape_mask``) against the *broadcast*
+  geometry set.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -32,13 +38,51 @@ from tilegrab_spark.sources.geometries import GeometrySet
 
 DEFAULT_SAFE_LIMIT = 250  # reference: tiles/collection.py:38
 
+def _tile_range(geom: GeometrySet, zoom: int, buffer_m: float) -> tuple:
+    """(x0, x1, y0, y1) of ``geom``'s bbox at ``zoom``, the bbox first
+    grown by ``buffer_m`` Web-Mercator meters."""
+    if buffer_m < 0:
+        raise ValueError(f"buffer_m must be >= 0, got {buffer_m}")
+    if buffer_m == 0:
+        return geom.tile_range(zoom)
+    w, sl, e, n = geom.bbox
+    mx, my = geo.lonlat_to_mercator(
+        np.array([w, e]), np.array([max(sl, -geo.MERCATOR_LAT_LIMIT),
+                                    min(n, geo.MERCATOR_LAT_LIMIT)])
+    )
+    lon2, lat2 = geo.mercator_to_lonlat(
+        np.array([mx[0] - buffer_m, mx[1] + buffer_m]),
+        np.array([my[0] - buffer_m, my[1] + buffer_m]),
+    )
+    w2 = max(-180.0, float(lon2[0]))
+    e2 = min(180.0, float(lon2[1]))
+    s2 = max(-geo.MERCATOR_LAT_LIMIT, float(lat2[0]))
+    n2 = min(geo.MERCATOR_LAT_LIMIT, float(lat2[1]))
+    return geo.bbox_tile_range(w2, s2, e2, n2, zoom)
+
+
+def shape_mask(polys, mnl, mnt, mxl, mxt, buffer_m: float = 0.0) -> np.ndarray:
+    """Which lon/lat tile boxes intersect ``polys`` (one geometry's
+    polygons, rings of [lon, lat]) — or, with ``buffer_m > 0``, lie within
+    ``buffer_m`` Web-Mercator meters of them."""
+    if buffer_m <= 0:
+        return geo.boxes_intersect_polygons(mnl, mnt, mxl, mxt, polys)
+    # metric space: project boxes + rings to 3857 meters
+    # (y(lat) is monotonic, so lon/lat boxes map to boxes)
+    mpolys = [
+        [np.column_stack(geo.lonlat_to_mercator(*np.asarray(r, np.float64).T)) for r in poly]
+        for poly in polys
+    ]
+    return geo.boxes_within_distance_of_polygons(
+        *geo.lonlat_to_mercator(mnl, mnt), *geo.lonlat_to_mercator(mxl, mxt), mpolys, buffer_m
+    )
+
 
 def enumerate_tiles(
     spark: SparkSession,
     geom: GeometrySet,
     zoom: int,
     *,
-    num_partitions: int | None = None,
     buffer_m: float = 0.0,
 ) -> DataFrame:
     """Tiles covering ``geom``'s bbox at ``zoom`` (F1+F4), in the
@@ -50,33 +94,13 @@ def enumerate_tiles(
     a buffered selection; ``refine_by_shape(buffer_m=...)`` applies the
     exact distance refine).
 
-    Columns: geom_id, z, x, y, cell_id, min_lon, min_lat, max_lon, max_lat.
+    Columns: x, y, z, geom_id, cell_id, min_lon, min_lat, max_lon, max_lat.
     """
-    if buffer_m < 0:
-        raise ValueError(f"buffer_m must be >= 0, got {buffer_m}")
-    if buffer_m > 0:
-        import numpy as np
-
-        w, sl, e, n = geom.bbox
-        mx, my = geo.lonlat_to_mercator(
-            np.array([w, e]), np.array([max(sl, -geo.MERCATOR_LAT_LIMIT),
-                                        min(n, geo.MERCATOR_LAT_LIMIT)])
-        )
-        lon2, lat2 = geo.mercator_to_lonlat(
-            np.array([mx[0] - buffer_m, mx[1] + buffer_m]),
-            np.array([my[0] - buffer_m, my[1] + buffer_m]),
-        )
-        w2 = max(-180.0, float(lon2[0]))
-        e2 = min(180.0, float(lon2[1]))
-        s2 = max(-geo.MERCATOR_LAT_LIMIT, float(lat2[0]))
-        n2 = min(geo.MERCATOR_LAT_LIMIT, float(lat2[1]))
-        x0, x1, y0, y1 = geo.bbox_tile_range(w2, s2, e2, n2, zoom)
-    else:
-        x0, x1, y0, y1 = geom.tile_range(zoom)
+    x0, x1, y0, y1 = _tile_range(geom, zoom, buffer_m)
     nx, ny = x1 - x0 + 1, y1 - y0 + 1
-    rng = spark.range(nx * ny, numPartitions=num_partitions)
     df = (
-        rng.withColumn("x", F.lit(x0) + (F.col("id") / ny).cast("long"))
+        spark.range(nx * ny)
+        .withColumn("x", F.lit(x0) + (F.col("id") / ny).cast("long"))
         .withColumn("y", F.lit(y0) + F.pmod(F.col("id"), F.lit(ny)).cast("long"))
         .withColumn("z", F.lit(zoom))
         .withColumn("geom_id", F.lit(geom.geom_id))
@@ -121,12 +145,14 @@ def enumerate_tiles_for_geoms(geoms_df: DataFrame, zoom: int) -> DataFrame:
 
 def _with_derived(df: DataFrame) -> DataFrame:
     mnl, mnt, mxl, mxt = tile_bounds_cols(F.col("x"), F.col("y"), F.col("z"))
-    return (
-        df.withColumn("cell_id", cell_id_col("z", "x", "y"))
-        .withColumn("min_lon", mnl)
-        .withColumn("min_lat", mnt)
-        .withColumn("max_lon", mxl)
-        .withColumn("max_lat", mxt)
+    return df.withColumns(
+        {
+            "cell_id": cell_id_col("z", "x", "y"),
+            "min_lon": mnl,
+            "min_lat": mnt,
+            "max_lon": mxl,
+            "max_lat": mxt,
+        }
     )
 
 
@@ -137,7 +163,10 @@ def refine_by_shape(
     invert: bool = False,
     buffer_m: float = 0.0,
 ) -> DataFrame:
-    """Exact tile-box ∩ geometry filter (F2/F3 ≙ J2 semi / J3 anti join).
+    """Exact tile-box ∩ geometry filter (F2/F3 ≙ J2 semi / J3 anti join)
+    over a distributed tile set, for many geometries or selections too
+    large for the driver (``tiles_for`` applies the same ``shape_mask``
+    in one driver pass).
 
     ``shapely box.intersects(geometry).any()`` at collection.py:145
     becomes a vectorized Arrow UDF over the four bound columns against the
@@ -172,37 +201,14 @@ def refine_by_shape(
         mxl: pd.Series,
         mxt: pd.Series,
     ) -> pd.Series:
-        import numpy as np
-
         polys_by_id = bc.value
         out = pd.Series(False, index=geom_id.index)
         for gid, idx in geom_id.groupby(geom_id).groups.items():
             polys = polys_by_id.get(gid)
             if not polys:
                 continue
-            a0 = mnl[idx].to_numpy(np.float64)
-            b0 = mnt[idx].to_numpy(np.float64)
-            a1 = mxl[idx].to_numpy(np.float64)
-            b1 = mxt[idx].to_numpy(np.float64)
-            if buf > 0:
-                # metric space: project boxes + rings to 3857 meters
-                # (y(lat) is monotonic, so lon/lat boxes map to boxes)
-                a0, b0 = geo.lonlat_to_mercator(a0, b0)
-                a1, b1 = geo.lonlat_to_mercator(a1, b1)
-                mpolys = []
-                for poly in polys:
-                    mrings = []
-                    for r in poly:
-                        arr = np.asarray(r, dtype=np.float64)
-                        mx, my = geo.lonlat_to_mercator(arr[:, 0], arr[:, 1])
-                        mrings.append(np.column_stack([mx, my]))
-                    mpolys.append(mrings)
-                hit = geo.boxes_within_distance_of_polygons(
-                    a0, b0, a1, b1, mpolys, buf
-                )
-            else:
-                hit = geo.boxes_intersect_polygons(a0, b0, a1, b1, polys)
-            out[idx] = hit
+            bounds = (c[idx].to_numpy(np.float64) for c in (mnl, mnt, mxl, mxt))
+            out[idx] = shape_mask(polys, *bounds, buf)
         return out
 
     pred = intersects("geom_id", "min_lon", "min_lat", "max_lon", "max_lat")
@@ -223,13 +229,26 @@ def tiles_for(
     (tiles/selectors.py:10-36 + collection.py:37-61): enumerate, optionally
     refine by exact shape (inverted = anti), truncate to ``safe_limit`` in
     generation order.
+
+    Selected on the driver in one numpy pass and returned as a local
+    relation with ``enumerate_tiles``' columns. The bbox range is built
+    in memory, so for unbounded selections compose ``enumerate_tiles``
+    and ``refine_by_shape`` instead.
     """
-    df = enumerate_tiles(spark, geom, zoom, buffer_m=buffer_m)
-    if by == "shape":
-        df = refine_by_shape(df, geom, invert=invert, buffer_m=buffer_m)
-    elif by != "bbox":
+    if by not in ("shape", "bbox"):
         raise ValueError(f"by must be 'shape' or 'bbox', got {by!r}")
+    if safe_limit is not None and safe_limit < 0:
+        raise ValueError(f"safe_limit must be >= 0, got {safe_limit}")
+    x0, x1, y0, y1 = _tile_range(geom, zoom, buffer_m)
+    # generation order = x-major, y-minor (collection.py:141-143)
+    xs = np.repeat(np.arange(x0, x1 + 1, dtype=np.int64), y1 - y0 + 1)
+    ys = np.tile(np.arange(y0, y1 + 1, dtype=np.int64), x1 - x0 + 1)
+    if by == "shape":
+        hit = shape_mask(geom.polygons, *geo.tile_bounds(xs, ys, zoom), buffer_m)
+        xs, ys = xs[hit != invert], ys[hit != invert]
     if safe_limit is not None:
-        # generation order = x-major, y-minor (collection.py:141-143)
-        df = df.orderBy("x", "y").limit(safe_limit)
-    return df
+        xs, ys = xs[:safe_limit], ys[:safe_limit]
+    # an Arrow table plans as a LocalTableScan even when empty (an empty
+    # pandas frame would become an RDD scan that runs a job per read)
+    keys = spark.createDataFrame(pa.table({"x": xs, "y": ys}), "x long, y long")
+    return _with_derived(keys.withColumns({"z": F.lit(zoom), "geom_id": F.lit(geom.geom_id)}))

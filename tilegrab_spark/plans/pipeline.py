@@ -93,34 +93,6 @@ class Engine:
     def mosaic(self, joined: DataFrame, **kw) -> DataFrame:
         return mosaic_op(joined, **kw)
 
-    # --- auxiliary operators ---
-    def knn(self, queries_df: DataFrame, images: DataFrame | str, zoom: int, k: int, **kw) -> DataFrame:
-        from tilegrab_spark.operators.knn import knn_join
-
-        if isinstance(images, str):
-            images = read_image_table(self.spark, images)
-        return knn_join(queries_df, images.select("z", "x", "y", "image_id"), zoom, k, **kw)
-
-    def build_pyramid(self, images: DataFrame | str, table_path: str, *, z_max: int, z_min: int, **kw) -> None:
-        from tilegrab_spark.operators.pyramid import build_pyramid
-
-        if isinstance(images, str):
-            images = read_image_table(self.spark, images)
-        build_pyramid(images, table_path, z_max=z_max, z_min=z_min, **kw)
-
-    def verify(self, images: DataFrame | str, **kw) -> DataFrame:
-        from tilegrab_spark.operators.verify import verify_images
-
-        if isinstance(images, str):
-            images = read_image_table(self.spark, images, parse_key=False)
-        return verify_images(images, **kw)
-
-    def footprints(self, joined: DataFrame, **kw) -> DataFrame:
-        """Raster→vector: per-group coverage GeoJSON of present tiles."""
-        from tilegrab_spark.operators.footprint import coverage_footprints
-
-        return coverage_footprints(joined, **kw)
-
     # --- sinks (S5-S8) ---
     def write(
         self,
@@ -128,9 +100,6 @@ class Engine:
         path: str,
         *,
         stage: str,
-        mode: str = "append",
-        partition_by: tuple = (),
-        bytes_col: str | None = "bytes",
     ) -> DataFrame:
         """Durable stage commit: data parquet first (its _SUCCESS is the
         snapshot), then per-cell lineage to the metrics table.
@@ -146,10 +115,7 @@ class Engine:
             elif {"z", "x", "y"} <= set(out.columns):
                 out = out.withColumn("cell_id", cell_id_col("z", "x", "y"))
         out = out.withColumn("_run_id", F.lit(self.run_id))
-        writer = out.write.mode(mode)
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(path)
+        out.write.mode("append").parquet(path)
         committed = self.spark.read.parquet(path).filter(
             F.col("_run_id") == self.run_id
         )
@@ -161,6 +127,6 @@ class Engine:
                 committed,
                 run_id=self.run_id,
                 stage=stage,
-                bytes_col=bytes_col if bytes_col in out.columns else None,
+                bytes_col="bytes" if "bytes" in out.columns else None,
             )
         return committed

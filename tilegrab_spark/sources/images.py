@@ -9,8 +9,10 @@ reference's filename key (images/loader.py:12, regex
 
 Layout: parquet directory partitioned by ``(zoom, bucket)`` where
 ``bucket = pmod(cell_id, N)`` — the sandbox stand-in for an Iceberg table
-partitioned ``(zoom, bucket(N, cell_id))`` (SURVEY.md §4). Zoom+bucket
-partition pruning makes tile-range scans touch only relevant files.
+partitioned ``(zoom, bucket(N, cell_id))`` (SURVEY.md §4). Only a query
+that filters ``zoom``/``bucket`` itself prunes files: the fetch joins on
+the key parsed out of ``image_id``, from which no partition filter is
+derived, so each fetch reads the whole table.
 
 The synthetic generator runs DISTRIBUTED (mapInPandas over a cell spec
 DataFrame): the same code that makes a 500-row pytest fixture makes the
@@ -114,7 +116,7 @@ def read_image_table(spark: SparkSession, path: str, *, parse_key: bool = True) 
     """Scan the image table; optionally project the tile key out of
     ``image_id`` (P6: ``regexp_extract`` ≙ images/loader.py:24-28) plus the
     packed ``cell_id`` — all Catalyst expressions so Parquet still prunes
-    columns/partitions underneath.
+    columns underneath (partitions only under a ``zoom``/``bucket`` filter).
     """
     df = spark.read.parquet(path)
     if parse_key:
