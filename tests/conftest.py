@@ -67,13 +67,7 @@ def spark():
         app_name="tilegrab-spark-tests",
         master="local[4]",
         shuffle_partitions=4,
-        extra_conf={
-            "spark.ui.showConsoleProgress": "false",
-            # no Python call-site capture per Column call (several py4j
-            # round trips and a stack walk each); it only adds context
-            # to error messages
-            "spark.python.sql.dataFrameDebugging.enabled": "false",
-        },
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     yield s
     s.stop()

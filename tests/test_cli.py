@@ -301,3 +301,28 @@ def test_cli_resume_mosaic_shows_earlier_cells(spark, image_table, t_geojson, tm
         )
     assert np.array_equal(png.decode_png(bytes(m.bytes)), want)
 
+
+
+def test_cli_plan_then_fetch_into_one_tiles_out(spark, image_table, t_geojson, tmp_path):
+    """Plan mode and fetch mode share the default --tiles-out. A fetch
+    run after a plan-mode run reads back its rows with the fetch schema,
+    whatever columns the plan-mode files hold, and so does a --resume run
+    that reads every committed row of the selection."""
+    from tests.conftest import T_SHAPE_Z16
+
+    tiles_out, mosaics = tmp_path / "tiles", tmp_path / "out" / "mosaics"
+    base = ["--source", str(t_geojson), "--shape", "--zoom", "16",
+            "--tiles-out", str(tiles_out), "--out", str(tmp_path / "out"), "--quiet"]
+    assert main(base) == 0  # plan mode: tile rows without image columns
+    assert main(base + ["--images", image_table, "--png", "--tile-files"]) == 0
+    files = sorted(f.name for f in (tiles_out / "files").glob("*.png"))
+    assert files == sorted(f"16_{x}_{y}.png" for x, y in T_SHAPE_Z16)
+    (fetched,) = spark.read.parquet(str(mosaics)).collect()
+    assert fetched.n_tiles == 7 + 40  # the hot cell stores 41 revisions
+
+    assert main(base + ["--images", image_table, "--png", "--resume"]) == 0
+    (resumed,) = spark.read.parquet(str(mosaics)).filter(
+        f"_run_id != '{fetched._run_id}'"
+    ).collect()
+    assert resumed.n_tiles == fetched.n_tiles
+    assert bytes(resumed.bytes) == bytes(fetched.bytes)

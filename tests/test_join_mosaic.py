@@ -87,6 +87,22 @@ def test_mosaic_extent_anchored_at_present_tiles(spark, t_geom, image_table):
     assert (r.w, r.h) == (3 * 256, 4 * 256)
 
 
+def test_one_group_mosaic_runs_no_extent_aggregation(spark, t_geom, image_table):
+    """One mosaic per (geom_id, z) takes its extent from the group's own
+    rows: no aggregation over the join. Rows with a null key are dropped,
+    as the extent join dropped them."""
+    tiles = tiles_for(spark, t_geom, 16, by="shape")
+    images = read_image_table(spark, image_table).filter(~F.col("image_id").rlike("_1[0-9][0-9]$"))
+    joined = join_images(tiles, images.drop("cell_id"))
+    nulls = joined.limit(2).withColumn(
+        "geom_id", F.when(F.col("x") < 0, F.col("geom_id"))
+    ).withColumn("z", F.when(F.col("x") < 0, F.col("z")))
+    out = mosaic(joined.unionByName(nulls))
+    assert "HashAggregate" not in out._jdf.queryExecution().executedPlan().toString()
+    (r,) = out.collect()
+    assert (r.geom_id, r.z, r.tminx, r.tminy, r.n_tiles) == ("T", 16, 47439, 31441, 7)
+
+
 def test_grouping_w1_parity(spark, t_geom, image_table):
     """W1 relational grouping ≡ numpy sliding-window oracle over the full
     mosaic (grouping.py:9-29): full windows only, all-zero dropped."""

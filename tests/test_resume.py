@@ -1,9 +1,11 @@
 """Checkpoint/resume with per-partition lineage (S8/F5, north rule):
 kill after a partial commit, rerun, only missing cells recompute."""
 
+import re
+
 from pyspark.sql import functions as F
 
-from tests.conftest import T_SHAPE_Z16
+from tests.conftest import T_BBOX_Z16, T_SHAPE_Z16
 from tilegrab_spark.plans.lineage import MetricsStore, new_run_id
 from tilegrab_spark.plans.pipeline import Engine
 from tilegrab_spark.operators.tiles import tiles_for
@@ -71,3 +73,64 @@ def test_engine_end_to_end_resume(spark, tmp_path, t_geom, image_table):
     # lineage bytes track the written payload
     s = eng.metrics.summary().filter(F.col("stage") == "mosaic").collect()[0]
     assert s.cells == n_groups and s.bytes > 0
+
+
+def _jobs(spark, fn):
+    """``fn()`` and the number of Spark jobs it ran, counted by the
+    status tracker under a job group of its own."""
+    sc = spark.sparkContext
+    group = f"jobs-{new_run_id()}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_write_reads_back_with_the_written_schema(spark, tmp_path, t_geom, image_table):
+    """A write runs the data commit (the tile broadcast and the write)
+    and the lineage commit (its aggregation's shuffle stage and write),
+    and no job to infer the schema of the rows it reads back."""
+    eng = Engine(spark, metrics_path=str(tmp_path / "metrics"))
+    images = read_image_table(spark, image_table)
+    joined = eng.fetch(tiles_for(spark, t_geom, 16, by="bbox"), images)
+    committed, n = _jobs(spark, lambda: eng.write(joined, str(tmp_path / "f"), stage="fetch"))
+    assert n <= 4
+    assert committed.schema == spark.read.parquet(str(tmp_path / "f")).schema
+    assert committed.count() == joined.count()
+
+
+def test_resumed_fetch_and_write_jobs(spark, tmp_path, t_geom, image_table):
+    """Resuming adds no schema-inference job for the lineage table and
+    no shuffle for its committed cells."""
+    images = read_image_table(spark, image_table)
+    metrics, out = str(tmp_path / "metrics"), str(tmp_path / "f")
+    first = Engine(spark, metrics_path=metrics)
+    first.write(first.fetch(tiles_for(spark, t_geom, 16, by="shape"), images), out, stage="fetch")
+
+    eng = Engine(spark, metrics_path=metrics)
+    tiles = tiles_for(spark, t_geom, 16, by="bbox")
+    committed, n = _jobs(
+        spark, lambda: eng.write(eng.fetch(tiles, images, resume=True), out, stage="fetch")
+    )
+    assert n <= 5
+    got = {(r.x, r.y) for r in committed.collect()}
+    # the bbox minus the committed shape cells and the fixture's gap cell
+    assert got == {(x, y) for x, y in T_BBOX_Z16 if (x, y) not in T_SHAPE_Z16} - {(47441, 31442)}
+
+
+def test_resume_filter_plans_without_aggregate_or_shuffle(spark, tmp_path, t_geom):
+    ms = MetricsStore(spark, str(tmp_path / "metrics"))
+    tiles = tiles_for(spark, t_geom, 16, by="bbox")
+    # two runs commit overlapping cells: duplicate keys on the right side
+    ms.append_stage(tiles.filter(F.col("x") <= 47440), run_id="r1", stage="fetch")
+    ms.append_stage(tiles.filter(F.col("y") <= 31442), run_id="r2", stage="fetch")
+    remaining = ms.resume_filter(tiles, "fetch")
+    plan = remaining._jdf.queryExecution().executedPlan().toString()
+    assert "HashAggregate" not in plan
+    assert not re.search(r"(?<!Broadcast)Exchange", plan)
+    assert sorted((r.x, r.y) for r in remaining.collect()) == [
+        (x, y) for x, y in T_BBOX_Z16 if x > 47440 and y > 31442
+    ]

@@ -116,6 +116,39 @@ def test_tiles_for_plans_as_a_local_relation(spark, t_geom):
             assert node not in plan, (kw, node)
 
 
+def test_derived_columns_match_catalyst_columns_bitwise(spark):
+    """The five derived columns, parsed from SQL text, equal the Column
+    expressions (``cell_id_col``, ``tile_bounds_cols``) bit for bit at
+    every zoom, for a zoom column and for a literal zoom (constant
+    folded, as in ``tiles_for``)."""
+    from tilegrab_spark.functions.cells import tile_bounds_cols
+    from tilegrab_spark.operators.tiles import _with_derived
+    from tilegrab_spark.sources.images import cell_id_col
+
+    rng = np.random.default_rng(11)
+    rows = []
+    for z in range(23):
+        n = 1 << z
+        rows += [(int(x), int(y), z) for x, y in rng.integers(0, n, size=(200, 2))]
+        rows += [(0, 0, z), (n - 1, n - 1, z), (n // 2, n // 2, z)]
+    keys = spark.createDataFrame(rows, "x long, y long, z int")
+    for z in (1, 16, 22):
+        keys = keys.unionByName(
+            keys.filter(F.col("z") == z).withColumn("z", F.lit(z)).withColumn("x", F.col("x") + 0)
+        )
+    mnl, mnt, mxl, mxt = tile_bounds_cols(F.col("x"), F.col("y"), F.col("z"))
+    want = keys.withColumns({"cell_id": cell_id_col("z", "x", "y"), "min_lon": mnl,
+                             "min_lat": mnt, "max_lon": mxl, "max_lat": mxt})
+    got = _with_derived(keys)
+    assert got.schema == want.schema
+    a, b = got.toPandas(), want.toPandas()
+    assert len(a) == len(rows) + sum(1 for r in rows if r[2] in (1, 16, 22))
+    for c in ("x", "y", "z", "cell_id"):
+        assert (a[c] == b[c]).all(), c
+    for c in ("min_lon", "min_lat", "max_lon", "max_lat"):
+        assert (a[c].to_numpy().view(np.int64) == b[c].to_numpy().view(np.int64)).all(), c
+
+
 def test_tiles_for_validates_arguments(spark, t_geom):
     with pytest.raises(ValueError):
         tiles_for(spark, t_geom, 16, by="hull")

@@ -138,13 +138,14 @@ def main(argv=None) -> int:
         committed = fetched
     else:
         committed = eng.write(fetched, str(args.tiles_out), stage="fetch")
-        # one visible revision per cell in the tile sinks: the greatest
-        # image_id, the one the mosaic pastes last
-        latest = (
-            committed.groupBy("z", "x", "y")
-            .agg(F.max_by(F.struct("bytes", "fmt"), "image_id").alias("r"))
-            .select("z", "x", "y", "r.*")
-        )
+        if args.tile_files or args.pmtiles:
+            # one visible revision per cell in the tile sinks: the greatest
+            # image_id, the one the mosaic pastes last
+            latest = (
+                committed.groupBy("z", "x", "y")
+                .agg(F.max_by(F.struct("bytes", "fmt"), "image_id").alias("r"))
+                .select("z", "x", "y", "r.*")
+            )
         if args.tile_files:
             from tilegrab_spark.sources.export import export_tiles
 
@@ -158,9 +159,10 @@ def main(argv=None) -> int:
             export_pmtiles(latest, args.tiles_out / "pmtiles" / "tiles.pmtiles")
         if args.resume:
             # cells committed by earlier runs render too: every committed
-            # revision of the selected cells, this run's included
+            # revision of the selected cells, this run's included, read
+            # with the fetch schema (the table may hold plan-mode rows)
             committed = (
-                spark.read.parquet(str(args.tiles_out))
+                spark.read.schema(committed.schema).parquet(str(args.tiles_out))
                 .join(tiles.select("z", "x", "y"), ["z", "x", "y"], "left_semi")
                 .dropDuplicates(["z", "x", "y", "image_id"])
             )

@@ -68,6 +68,22 @@ def tile_bounds_cols(x: Column, y: Column, zoom: Column | int):
     return min_lon, y_to_lat(yd + 1), max_lon, y_to_lat(yd)
 
 
+# cell_id_col and tile_bounds_cols over the columns z, x, y, as SQL text:
+# the same int64/float64 operations in the same order, so the values are
+# bit-identical. Parsing one string is a single driver round trip, where
+# building the Column tree takes dozens.
+CELL_ID_SQL = "shiftleft(CAST(z AS BIGINT), 58) | shiftleft(CAST(x AS BIGINT), 29) | CAST(y AS BIGINT)"
+_N_SQL = "pow(2.0d, CAST(z AS DOUBLE))"
+_LON_SQL = "{} / " + _N_SQL + " * 360.0d - 180.0d"
+_LAT_SQL = f"degrees(atan(sinh({math.pi!r}d * (1.0d - 2.0d * {{}} / {_N_SQL}))))"
+TILE_BOUNDS_SQL = (  # min_lon, min_lat, max_lon, max_lat
+    _LON_SQL.format("CAST(x AS DOUBLE)"),
+    _LAT_SQL.format("(CAST(y AS DOUBLE) + 1.0d)"),
+    _LON_SQL.format("(CAST(x AS DOUBLE) + 1.0d)"),
+    _LAT_SQL.format("CAST(y AS DOUBLE)"),
+)
+
+
 def tile_mercator_bounds_cols(x: Column, y: Column, zoom: Column | int):
     """EPSG:3857 meter bounds of a single tile (P3)."""
     zoom = F.lit(zoom) if isinstance(zoom, int) else zoom

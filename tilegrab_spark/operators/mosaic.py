@@ -4,8 +4,8 @@ Reference semantics re-expressed:
 - ``mosaic()`` (images/mosaic.py:7-27): canvas spans the min/max tile
   extent of the *present* images, each tile pasted at
   ``((x-minx)*tw, (y-miny)*th)``, RGB, missing tiles black, overlap =
-  last-paste-wins. Here the extent is an A1 aggregation
-  (``groupBy.agg(min/max)``) broadcast-joined back, and paste order is
+  last-paste-wins. Here the stitch takes the extent from its group's
+  own rows (no extent pass over the join), and paste order is
   made deterministic by sorting (y, x, image_id) before pasting. Rows
   with a null payload (selected tiles with no stored image) widen the
   extent and are never pasted, so they render black.
@@ -182,11 +182,20 @@ def mosaic(
     corner, known driver-side). Skips the data-extent aggregation —
     at scale that aggregation is a second pass over the join, so passing
     the anchor halves the work. ``full_groups_only`` needs data extents
-    and therefore still runs the aggregation.
+    and therefore still runs the aggregation. One mosaic per group
+    (``group_w=None``) never runs it: the stitch spans its own rows.
     """
     if anchor is not None and not full_groups_only:
         df = joined.withColumn("_ax", F.lit(int(anchor[0])).cast("long")).withColumn(
             "_ay", F.lit(int(anchor[1])).cast("long")
+        )
+    elif group_w is None:
+        # one mosaic per (geom_id, z): the stitch takes its extent from
+        # the group's own rows, so no extent aggregation runs. A row with
+        # a null geom_id or z makes no mosaic, as in the grouped modes,
+        # whose extent join drops it
+        df = joined.filter(F.col("geom_id").isNotNull() & F.col("z").isNotNull()).withColumns(
+            {"_ax": F.lit(0).cast("long"), "_ay": F.lit(0).cast("long")}
         )
     else:
         ext = joined.groupBy("geom_id", "z").agg(

@@ -28,11 +28,7 @@ import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tilegrab_spark.functions.cells import (
-    cell_encode_cols,
-    tile_bounds_cols,
-    cell_id_col,
-)
+from tilegrab_spark.functions.cells import CELL_ID_SQL, TILE_BOUNDS_SQL, cell_encode_cols
 from tilegrab_spark.kernels import geo
 from tilegrab_spark.sources.geometries import GeometrySet
 
@@ -144,14 +140,17 @@ def enumerate_tiles_for_geoms(geoms_df: DataFrame, zoom: int) -> DataFrame:
 
 
 def _with_derived(df: DataFrame) -> DataFrame:
-    mnl, mnt, mxl, mxt = tile_bounds_cols(F.col("x"), F.col("y"), F.col("z"))
+    # from SQL text: five parsed expressions, bit-identical to
+    # cell_id_col and tile_bounds_cols, cost a driver round trip each,
+    # where the Column forms cost one per Column operation
+    mnl, mnt, mxl, mxt = TILE_BOUNDS_SQL
     return df.withColumns(
         {
-            "cell_id": cell_id_col("z", "x", "y"),
-            "min_lon": mnl,
-            "min_lat": mnt,
-            "max_lon": mxl,
-            "max_lat": mxt,
+            "cell_id": F.expr(CELL_ID_SQL),
+            "min_lon": F.expr(mnl),
+            "min_lat": F.expr(mnt),
+            "max_lon": F.expr(mxl),
+            "max_lat": F.expr(mxt),
         }
     )
 

@@ -8,13 +8,23 @@ append to a parquet (Iceberg-style) METRICS table
     (run_id, stage, partition_id, cell_id, status, rows, bytes,
      committed_at)
 
-written in the SAME job that writes the stage's data output, after the
-data write commits (the parquet ``_SUCCESS`` marker is the snapshot
+written from the stage's committed data output, right after the data
+write commits (the parquet ``_SUCCESS`` marker is the snapshot
 commit — the analogue of the reference's atomic tmp+rename flush at
 progress.py:105-123). Resume = left-anti join of the work-unit cells
 against committed cells — the *intended* semantics of the reference's
 ``upsert_by_tile_index``/``progress_by_tile`` (progress.py:150-172; the
 reference's own lookup is broken, SURVEY.md §8 Q2).
+
+A resume adds one Spark job, the broadcast of the committed cells: the
+table is read with its known ``METRICS_SCHEMA`` (no schema-inference
+job), and the committed rows' ``cell_id`` is broadcast as it stands. A
+cell committed by several runs or partitions appears several times
+there, which a left-anti join ignores, so no ``distinct`` (and no
+shuffle) is needed. The broadcast therefore grows with the stage's
+lineage rows, one per (cell, partition) in every run, not with the
+distinct cells: a metrics table that many runs append to broadcasts
+more than one that a single run wrote.
 
 Statuses mirror DownloadStatus (downloader/status.py:3-11).
 """
@@ -74,25 +84,20 @@ class MetricsStore:
     def read(self) -> DataFrame:
         if not self.exists():
             return self.spark.createDataFrame([], METRICS_SCHEMA)
-        return self.spark.read.parquet(self.path)
-
-    def committed_cells(self, stage: str, *, statuses=("SUCCESS", "SKIP_AND_EXISTS")) -> DataFrame:
-        """Distinct cells already committed for ``stage`` — the resume
-        anti-join's right side (F5)."""
-        return (
-            self.read()
-            .filter((F.col("stage") == stage) & F.col("status").isin(*statuses))
-            .select("cell_id")
-            .distinct()
-        )
+        return self.spark.read.schema(METRICS_SCHEMA).parquet(self.path)
 
     def resume_filter(self, work_df: DataFrame, stage: str) -> DataFrame:
-        """Drop work units whose cell_id is already committed (F5)."""
+        """Drop work units whose cell_id is already committed (F5): a
+        broadcast left-anti join against every committed lineage row of
+        ``stage``, duplicates and all. The broadcast side holds one row
+        per (cell, partition) of every run that committed the stage, so
+        it grows with the runs appended to this table."""
         if not self.exists():
             return work_df
-        return work_df.join(
-            F.broadcast(self.committed_cells(stage)), on="cell_id", how="left_anti"
+        done = self.read().filter(
+            (F.col("stage") == stage) & F.col("status").isin("SUCCESS", "SKIP_AND_EXISTS")
         )
+        return work_df.join(F.broadcast(done.select("cell_id")), on="cell_id", how="left_anti")
 
     def latest(self) -> DataFrame:
         """Upsert view (J4): one row per (stage, cell_id) — the newest
@@ -140,7 +145,7 @@ def _stage_metrics(
             F.lit(run_id).alias("run_id"),
             F.lit(stage).alias("stage"),
             F.col("partition_id"),
-            F.col("cell_id"),
+            F.col("cell_id").cast("long").alias("cell_id"),
             F.lit(status).alias("status"),
             F.col("rows"),
             F.coalesce(F.col("bytes"), F.lit(0)).alias("bytes"),

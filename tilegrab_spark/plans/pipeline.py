@@ -12,6 +12,11 @@ Every ``write`` commits data + per-cell lineage and returns the committed
 rows of this run, so later sinks read the commit instead of re-running
 the plan; re-running ``fetch`` with ``resume=True`` anti-joins away
 committed cells (kill/resume story).
+
+Request-sized calls pay few fixed Spark jobs: tables the engine wrote
+are read back with the schema it wrote (no schema-inference job), and
+the resume anti-join broadcasts the committed lineage rows without a
+shuffle (plans/lineage.py).
 """
 
 from __future__ import annotations
@@ -106,7 +111,10 @@ class Engine:
 
         Returns the committed rows of this run (a lazy read of ``path``
         filtered to this run's ``_run_id``), so further sinks read the
-        commit instead of re-running ``df``'s plan."""
+        commit instead of re-running ``df``'s plan. The read uses the
+        schema just written: it runs no schema-inference job, and rows
+        other runs appended to ``path`` with other columns (a plan-mode
+        table, say) cannot change it."""
         out = df
         if "cell_id" not in out.columns:
             if {"z", "gx", "gy"} <= set(out.columns):
@@ -116,7 +124,7 @@ class Engine:
                 out = out.withColumn("cell_id", cell_id_col("z", "x", "y"))
         out = out.withColumn("_run_id", F.lit(self.run_id))
         out.write.mode("append").parquet(path)
-        committed = self.spark.read.parquet(path).filter(
+        committed = self.spark.read.schema(out.schema).parquet(path).filter(
             F.col("_run_id") == self.run_id
         )
         if self.metrics is not None and "cell_id" in out.columns:

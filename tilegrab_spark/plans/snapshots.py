@@ -60,6 +60,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from tilegrab_spark.plans.lineage import METRICS_SCHEMA, MetricsStore, _stage_metrics
+
 
 class CommitConflict(RuntimeError):
     """Another writer committed the same sequence number first."""
@@ -826,7 +828,7 @@ class SnapshotTable:
         return removed
 
 
-class SnapshotMetricsStore:
+class SnapshotMetricsStore(MetricsStore):
     """``MetricsStore`` semantics over a :class:`SnapshotTable` — the
     north rule's Iceberg metrics table made literal. Each stage's
     lineage append is a snapshot commit: a job killed after writing its
@@ -836,63 +838,24 @@ class SnapshotMetricsStore:
     metrics history (``read(as_of=...)``) replaces log archaeology when
     auditing a resumed run.
 
-    Drop-in for :class:`tilegrab_spark.plans.lineage.MetricsStore` (the
-    query helpers are inherited by delegation to the same DataFrame
-    shapes); ``Engine(metrics_format="snapshot")`` selects it.
+    Drop-in for :class:`tilegrab_spark.plans.lineage.MetricsStore`: only
+    the storage calls differ, and the query surface (``resume_filter``,
+    ``latest``, ``summary``) is inherited over the snapshot-consistent
+    read. ``Engine(metrics_format="snapshot")`` selects it.
     """
 
     def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path)
         self.table = SnapshotTable(spark, path)
 
     def exists(self) -> bool:
         return self.table.current_seq() > 0
 
     def append_stage(self, df, *, run_id, stage, status="SUCCESS", bytes_col=None) -> int:
-        from tilegrab_spark.plans.lineage import _stage_metrics
-
         m = _stage_metrics(df, run_id=run_id, stage=stage, status=status, bytes_col=bytes_col)
         return self.table.append(m, stat_cols=("cell_id", "stage"))
 
     def read(self, *, as_of: int | None = None) -> DataFrame:
-        from tilegrab_spark.plans.lineage import METRICS_SCHEMA
-
         if not self.exists():
             return self.spark.createDataFrame([], METRICS_SCHEMA)
         return self.table.read(as_of=as_of)
-
-    # query surface = MetricsStore's, over the snapshot-consistent read
-    def committed_cells(self, stage, *, statuses=("SUCCESS", "SKIP_AND_EXISTS")) -> DataFrame:
-        return (
-            self.read()
-            .filter((F.col("stage") == stage) & F.col("status").isin(*statuses))
-            .select("cell_id")
-            .distinct()
-        )
-
-    def resume_filter(self, work_df: DataFrame, stage: str) -> DataFrame:
-        if not self.exists():
-            return work_df
-        return work_df.join(
-            F.broadcast(self.committed_cells(stage)), on="cell_id", how="left_anti"
-        )
-
-    def latest(self) -> DataFrame:
-        return self._latest_of(self.read())
-
-    def summary(self) -> DataFrame:
-        return self.read().groupBy("run_id", "stage", "status").agg(
-            F.countDistinct("cell_id").alias("cells"),
-            F.sum("rows").alias("rows"),
-            F.sum("bytes").alias("bytes"),
-        )
-
-    @staticmethod
-    def _latest_of(df: DataFrame) -> DataFrame:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("stage", "cell_id").orderBy(
-            F.desc("committed_at"), F.desc("run_id"), F.desc("partition_id")
-        )
-        return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")

@@ -3,7 +3,9 @@
 Tuned for the 100 TB target (SURVEY.md §4): AQE on (runtime coalescing +
 skew-join splitting), Arrow transfer for the pandas-UDF kernels, and
 shuffle partitioning sized by the caller (tests pass 32 to match
-local[32]; a real cluster sizes it to ~2-3x total cores).
+local[32]; a real cluster sizes it to ~2-3x total cores). Per-Column
+call-site capture is off, so building a plan costs fewer driver round
+trips per request.
 """
 
 from __future__ import annotations
@@ -39,6 +41,10 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        # No Python call-site capture per Column call: with it on, every
+        # Column method costs extra py4j round trips and a stack walk,
+        # and the captured site only adds context to error messages.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if shuffle_partitions is not None:
         builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))

@@ -30,6 +30,7 @@ import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from tilegrab_spark.functions.cells import CELL_ID_SQL, TILE_BOUNDS_SQL
 from tilegrab_spark.kernels.geo import EPSILON, WEB_MERCATOR_EXTENT
 
 _PI = repr(math.pi)
@@ -45,8 +46,8 @@ _SQL_FUNCTIONS: list[tuple[str, str]] = [
         """
 CREATE OR REPLACE TEMPORARY FUNCTION tg_cell_id(z BIGINT, x BIGINT, y BIGINT)
 RETURNS BIGINT
-RETURN shiftleft(z, 58) | shiftleft(x, 29) | y
-""",
+RETURN {}
+""".format(CELL_ID_SQL),
     ),
     (
         "tg_cell_unpack",
@@ -83,17 +84,12 @@ RETURN named_struct(
     ),
     (
         "tg_tile_bounds",
-        f"""
+        """
 CREATE OR REPLACE TEMPORARY FUNCTION tg_tile_bounds(x BIGINT, y BIGINT, z INT)
 RETURNS STRUCT<min_lon: DOUBLE, min_lat: DOUBLE, max_lon: DOUBLE, max_lat: DOUBLE>
 RETURN named_struct(
-  'min_lon', CAST(x AS DOUBLE) / pow(2.0d, z) * 360.0d - 180.0d,
-  'min_lat', degrees(atan(sinh({_PI}d * (1.0d - 2.0d * (CAST(y AS DOUBLE) + 1.0d)
-                                                  / pow(2.0d, z))))),
-  'max_lon', (CAST(x AS DOUBLE) + 1.0d) / pow(2.0d, z) * 360.0d - 180.0d,
-  'max_lat', degrees(atan(sinh({_PI}d * (1.0d - 2.0d * CAST(y AS DOUBLE)
-                                                  / pow(2.0d, z))))))
-""",
+  'min_lon', {}, 'min_lat', {}, 'max_lon', {}, 'max_lat', {})
+""".format(*TILE_BOUNDS_SQL),
     ),
     (
         "tg_tile_merc_bounds",
