@@ -4,7 +4,7 @@ import numpy as np
 import pytest
 
 from tilegrab_spark.operators.majority import majority_filter, window_mode
-from tilegrab_spark.operators.multimodal import decode_payload
+from tilegrab_spark.kernels import decode_payload
 
 from tests.test_polygonize import SCHEMA, _tiles_from_world
 

@@ -4,7 +4,7 @@ import numpy as np
 import pytest
 
 from tilegrab_spark.operators.dedup import release_signature_caches
-from tilegrab_spark.operators.multimodal import decode_payload
+from tilegrab_spark.kernels import decode_payload
 from tilegrab_spark.operators.polygonize import polygonize
 from tilegrab_spark.operators.sieve import sieve, sieve_labels
 

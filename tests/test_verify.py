@@ -51,3 +51,31 @@ def test_verify_images_detects_corruption(spark, image_table, tmp_path):
     assert not out[ids[1]].caption_match    # caption mismatch caught
     assert not out[ids[2]].phash_match      # phash mismatch caught
     assert out[ids[3]].psnr == 999.0 and out[ids[3]].caption_match
+
+
+def test_verify_images_gates_lossy_webp_at_min_psnr(spark):
+    """A WebP whose first chunk is VP8 is lossy, like a JPEG: its phash
+    matches the decoded pixels, but the PSNR gate still applies. VP8L
+    rows stay lossless."""
+    from tilegrab_spark.kernels import vp8, webp
+    from tilegrab_spark.sources.images import expected_pixels, synth_caption
+
+    rows = []
+    for iid, encode in (
+        ("10_5_7_0", lambda a: vp8.encode_webp_vp8(a, qindex=127)),
+        ("10_6_7_0", webp.encode_webp),
+    ):
+        want = expected_pixels(iid, 64, 64)
+        data = encode(want)
+        z, x, y, src = (int(v) for v in iid.split("_"))
+        rows.append((iid, data, 64, 64, "webp",
+                     synth_caption(z, x, y, src, int(want.sum())),
+                     png.phash64(webp.decode_webp(data))))
+    d = spark.createDataFrame(
+        rows, "image_id string, bytes binary, w int, h int, fmt string, caption string, phash long"
+    )
+    out = {r.image_id: r for r in verify_images(d).collect()}
+    lossy, lossless = out["10_5_7_0"], out["10_6_7_0"]
+    assert lossy.decode_ok and lossy.caption_match
+    assert lossy.psnr < 40 and not lossy.phash_match
+    assert lossless.psnr == 999.0 and lossless.phash_match

@@ -151,7 +151,7 @@ class TestContainer:
         assert psnr(img, webp.decode_webp(data)) >= 40.0
 
     def test_decode_payload_integration(self):
-        from tilegrab_spark.operators.multimodal import decode_payload
+        from tilegrab_spark.kernels import decode_payload
 
         img = smooth_rgb(40, 40)
         data = vp8.encode_webp_vp8(img, qindex=4)

@@ -74,7 +74,7 @@ class TestRoundtrip:
                 webp.decode_webp(bad)
 
     def test_decode_payload_integration(self):
-        from tilegrab_spark.operators.multimodal import decode_payload
+        from tilegrab_spark.kernels import decode_payload
 
         arr = png.synth_tile_pixels(1, 2, 3, 0, 16, 16)
         out = decode_payload(webp.encode_webp(arr), "webp", 16, 16)

@@ -31,7 +31,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from tilegrab_spark.operators.multimodal import decode_payload
+from tilegrab_spark.kernels import decode_payload
 
 __all__ = ["compile_band_expr", "band_math", "NAMED_INDEXES"]
 

@@ -27,7 +27,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from tilegrab_spark.kernels import png
+from tilegrab_spark.kernels import decode_payload, png
 
 __all__ = ["AUGMENT_OPS", "AUGMENT_SCHEMA", "augment_images"]
 
@@ -95,7 +95,6 @@ def augment_images(
         raise ValueError(f"mode must be 'one' or 'all', got {mode!r}")
     if not 0.0 < crop_frac <= 1.0:
         raise ValueError(f"crop_frac must be in (0, 1], got {crop_frac}")
-    from tilegrab_spark.operators.multimodal import decode_payload
 
     params = (float(crop_frac), int(brightness_delta))
     ops_t, mode_l, seed_i = tuple(ops), mode, int(seed)

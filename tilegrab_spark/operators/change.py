@@ -41,7 +41,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from tilegrab_spark.operators.multimodal import decode_payload
+from tilegrab_spark.kernels import decode_payload
 
 __all__ = ["tile_diff", "change_summary", "mean_ssim"]
 

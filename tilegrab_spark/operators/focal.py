@@ -47,8 +47,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from tilegrab_spark.kernels import decode_payload
 from tilegrab_spark.kernels.geo import pack_cell_id
-from tilegrab_spark.operators.multimodal import decode_payload
 
 __all__ = ["focal_box_stats"]
 

@@ -61,8 +61,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from tilegrab_spark.kernels import decode_payload
 from tilegrab_spark.kernels.geo import pack_cell_id, unpack_cell_id
-from tilegrab_spark.operators.multimodal import decode_payload
+from tilegrab_spark.sources.images import cell_id_col
 
 __all__ = [
     "flow_direction",
@@ -705,10 +706,8 @@ def watersheds(
         # flat cell index in the (otherwise unused) pw column — one
         # groupBy delivers them to the right kernel group for free
         n_world = (1 << z) * tile_px
-        tkey_expr = (
-            F.shiftleft(F.lit(z).cast("long"), 58)
-            .bitwiseOR(F.shiftleft(F.floor(F.col("gx") / tile_px).cast("long"), 29))
-            .bitwiseOR(F.floor(F.col("gy") / tile_px).cast("long"))
+        tkey_expr = cell_id_col(
+            F.lit(z), F.floor(F.col("gx") / tile_px), F.floor(F.col("gy") / tile_px)
         )
         idx_expr = (
             (F.col("gy") % tile_px).cast("int") * tile_px

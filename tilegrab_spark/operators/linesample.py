@@ -36,9 +36,10 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
+from tilegrab_spark.kernels import decode_payload
 from tilegrab_spark.kernels.geo import WGS84_RADIUS
-from tilegrab_spark.operators.multimodal import decode_payload
 from tilegrab_spark.operators.snap import explode_segments
+from tilegrab_spark.sources.images import cell_id_col
 
 __all__ = ["sample_raster_along"]
 
@@ -127,11 +128,7 @@ def sample_raster_along(
             ),
         )
     )
-    tkey = (
-        F.shiftleft(F.lit(z).cast("long"), 58)
-        .bitwiseOR(F.shiftleft((F.col("gx") / tile_px).cast("long"), 29))
-        .bitwiseOR((F.col("gy") / tile_px).cast("long"))
-    )
+    tkey = cell_id_col(F.lit(z), F.col("gx") / tile_px, F.col("gy") / tile_px)
     pix = ((F.col("gy") % tile_px) * tile_px + (F.col("gx") % tile_px)).cast("int")
     stations = st.select(
         F.col(line_id).cast("string").alias("line_id"),
@@ -145,11 +142,7 @@ def sample_raster_along(
         ).alias("sts")
     )
     img = images.filter(F.col("z") == z).select(
-        (
-            F.shiftleft(F.col("z").cast("long"), 58)
-            .bitwiseOR(F.shiftleft(F.col("x").cast("long"), 29))
-            .bitwiseOR(F.col("y").cast("long"))
-        ).alias("_ik"),
+        cell_id_col().alias("_ik"),
         "fmt", "bytes", "w", "h",
     )
     joined = per_tile.join(img, on=F.col("_tk") == F.col("_ik"), how="left")

@@ -32,10 +32,10 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from tilegrab_spark.kernels import decode_payload
 from tilegrab_spark.kernels.geo import pack_cell_id
 from tilegrab_spark.kernels.png import encode_png
 from tilegrab_spark.operators.focal import _strip
-from tilegrab_spark.operators.multimodal import decode_payload
 
 __all__ = ["majority_filter", "window_mode"]
 

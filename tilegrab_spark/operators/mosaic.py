@@ -8,7 +8,10 @@ Reference semantics re-expressed:
   own rows (no extent pass over the join), and paste order is
   made deterministic by sorting (y, x, image_id) before pasting. Rows
   with a null payload (selected tiles with no stored image) widen the
-  extent and are never pasted, so they render black.
+  extent and are never pasted, so they render black. Every tile
+  decodes through ``kernels.decode_payload``, as every reference tile
+  goes through PIL; a payload it rejects (corrupt, or an unknown
+  ``fmt``) renders black and counts in ``n_bad``.
 - ``group_image()`` (images/grouping.py:9-29): re-chunk the mosaic into
   gw×gh-tile groups, dropping all-zero groups (F7) and incomplete
   trailing windows (``sliding_window_view`` yields full windows only).
@@ -30,7 +33,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from tilegrab_spark.kernels import geo, png
+from tilegrab_spark.kernels import decode_payload, geo, png
 
 MOSAIC_SCHEMA = (
     "geom_id string, z int, gx int, gy int, "
@@ -77,20 +80,8 @@ def _stitch_core(
         data = datas[i]
         if data is None:
             continue
-        data = bytes(data)
         try:
-            if fmts[i] == "png":
-                arr = png.decode_png(data)
-            elif fmts[i] in ("jpg", "jpeg"):
-                from tilegrab_spark.kernels import jpeg
-
-                arr = jpeg.decode_jpeg(data)
-            elif fmts[i] == "webp":
-                from tilegrab_spark.kernels import webp
-
-                arr = webp.decode_webp(data)
-            else:
-                arr = _raw_decode(data, tile_w, tile_h)
+            arr = decode_payload(bytes(data), fmts[i], tile_w, tile_h)
         except Exception:
             # at 10^12 rows a corrupt payload is a statistical certainty;
             # one bad tile must not kill the stage — it renders black
@@ -143,10 +134,6 @@ def _mosaic_arrow_schema():
 
 
 _ARROW_SCHEMA = _mosaic_arrow_schema()
-
-
-def _raw_decode(data: bytes, w: int, h: int) -> np.ndarray:
-    return np.frombuffer(data, dtype=np.uint8).reshape(h, w, 3)
 
 
 def mosaic(

@@ -1,8 +1,10 @@
 """Multimodal (image/audio/video) column processing: opaque ``binary``
 payloads + typed metadata, processed by Arrow-batched kernels over
 ``mapInPandas`` — schema, partitioning, UDF signature and batch shape
-are real. All image codecs (PNG, baseline+progressive JPEG, lossless
-VP8L and lossy VP8 WebP), WAV audio (PCM/float/mu-law/A-law) and
+are real. Image payloads decode through the engine's one decoder,
+:func:`tilegrab_spark.kernels.decode_payload`. All image codecs (PNG,
+baseline+progressive JPEG, lossless VP8L and lossy VP8 WebP, GIF, BMP,
+TIFF), WAV audio (PCM/float/mu-law/A-law) and
 MJPEG-AVI video are the engine's own pure-numpy kernels; compressed
 audio gets STRUCTURAL parsing for real (kernels/mp3.py →
 :func:`audio_metadata`: duration/bitrate/channels/VBR without PCM),
@@ -21,7 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from tilegrab_spark.kernels import png
+from tilegrab_spark.kernels import decode_payload, png
 
 IMAGE_FEATURES_SCHEMA = (
     "image_id string, w int, h int, fmt string, "
@@ -37,39 +39,6 @@ IMAGE_QUALITY_SCHEMA = (
     "brightness double, saturation double, "
     "n_dark long, n_bright long, n_px long"
 )
-
-
-def decode_payload(data: bytes, fmt: str, w: int, h: int) -> np.ndarray:
-    """Decode a binary payload to (H,W,3) uint8. PNG, baseline +
-    progressive JPEG, lossless WebP (kernels/webp.py, VP8L), lossy WebP
-    (kernels/vp8.py, VP8 key frames), GIF (kernels/gif.py — first frame
-    of an animation) and raw are all real, pure numpy. Corrupt payloads
-    raise ValueError and surface in decode_summary counts."""
-    if fmt == "png":
-        return png.decode_png(data)
-    if fmt in ("jpg", "jpeg"):
-        from tilegrab_spark.kernels import jpeg
-
-        return jpeg.decode_jpeg(data)
-    if fmt == "raw":
-        return np.frombuffer(data, dtype=np.uint8).reshape(h, w, 3)
-    if fmt == "webp":
-        from tilegrab_spark.kernels import webp
-
-        return webp.decode_webp(data)
-    if fmt == "gif":
-        from tilegrab_spark.kernels import gif
-
-        return gif.decode_gif(data)
-    if fmt == "bmp":
-        from tilegrab_spark.kernels import bmp
-
-        return bmp.decode_bmp(data)
-    if fmt in ("tif", "tiff"):
-        from tilegrab_spark.kernels import geotiff
-
-        return geotiff.read_geotiff(data)[0]
-    raise ValueError(f"unknown image fmt {fmt!r}")
 
 
 def image_features(df: DataFrame) -> DataFrame:

@@ -58,9 +58,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from tilegrab_spark.kernels import decode_payload
 from tilegrab_spark.operators.components import connected_components
 from tilegrab_spark.operators.dedup import _persist_signatures
-from tilegrab_spark.operators.multimodal import decode_payload
 
 __all__ = ["polygonize", "polygons_lonlat", "polygons_geojson"]
 

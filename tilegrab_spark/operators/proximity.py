@@ -43,8 +43,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from tilegrab_spark.kernels import decode_payload
 from tilegrab_spark.operators.costdistance import cost_distance
-from tilegrab_spark.operators.multimodal import decode_payload
 
 __all__ = ["proximity", "feature_pixels"]
 

@@ -29,7 +29,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from tilegrab_spark.kernels import png
+from tilegrab_spark.kernels import decode_payload, png
+from tilegrab_spark.kernels.geo import pack_cell_id
 
 PARENT_SCHEMA = (
     "image_id string, bytes binary, w int, h int, fmt string, "
@@ -52,8 +53,11 @@ def build_parent_level(
 
     Children are placed in a 2x2 canvas by (x&1, y&1), missing children
     stay black (same missing-tile semantics as the mosaic, mosaic.py:20),
-    then block-mean 2:1 downsample. Output rows carry the image-table
-    schema so the result appends straight into the pyramid table.
+    then block-mean 2:1 downsample. Children of any image ``fmt`` decode
+    through ``kernels.decode_payload`` (raw ones at ``tile_w`` x
+    ``tile_h``); parents are always PNG. Output rows carry the
+    image-table schema so the result appends straight into the pyramid
+    table.
     """
     pz = zoom - 1
     df = (
@@ -71,13 +75,13 @@ def build_parent_level(
     import pyarrow as pa
     from typing import Tuple
 
-    def _rollup_core(px, py, xs, ys, datas):
+    def _rollup_core(px, py, xs, ys, datas, fmts):
         canvas = np.zeros((tile_h * 2, tile_w * 2, 3), dtype=np.uint8)
         n = 0
         for i in sorted(range(len(xs)), key=lambda i: (ys[i], xs[i])):
             if datas[i] is None:
                 continue
-            arr = png.decode_png(bytes(datas[i]))
+            arr = decode_payload(bytes(datas[i]), fmts[i], tile_w, tile_h)
             ox = (int(xs[i]) & 1) * tile_w
             oy = (int(ys[i]) & 1) * tile_h
             canvas[oy : oy + tile_h, ox : ox + tile_w] = arr[:tile_h, :tile_w]
@@ -86,7 +90,7 @@ def build_parent_level(
             canvas.reshape(tile_h, 2, tile_w, 2, 3).mean(axis=(1, 3)).astype(np.uint8)
         )
         data = png.encode_png(small, filter_type=2, level=png_level)
-        cell = (pz << 58) | (px << 29) | py
+        cell = int(pack_cell_id(px, py, pz))
         return {
             "image_id": f"{pz}_{px}_{py}_{src}",
             "bytes": data,
@@ -96,7 +100,7 @@ def build_parent_level(
             "caption": f"tile {pz}/{px}/{py} src={src} rollup n={n}",
             "phash": png.phash64(small),
             "zoom": pz,
-            "bucket": int(cell % n_buckets),
+            "bucket": cell % n_buckets,
             "n_children": n,
         }
 
@@ -117,6 +121,7 @@ def build_parent_level(
             tbl.column("x").to_pylist(),
             tbl.column("y").to_pylist(),
             tbl.column("bytes").to_pylist(),
+            tbl.column("fmt").to_pylist(),
         )
         return pa.Table.from_pylist([row], schema=_schema)
 

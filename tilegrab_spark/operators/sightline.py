@@ -48,7 +48,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from tilegrab_spark.operators.multimodal import decode_payload
+from tilegrab_spark.kernels import decode_payload
+from tilegrab_spark.sources.images import cell_id_col
 
 __all__ = ["line_of_sight"]
 
@@ -109,11 +110,7 @@ def line_of_sight(
     steps = steps.select(
         "pair_id", "i", "n", gx.alias("gx"), gy.alias("gy")
     )
-    tkey = (
-        F.shiftleft(F.lit(z).cast("long"), 58)
-        .bitwiseOR(F.shiftleft((F.col("gx") / tp).cast("long"), 29))
-        .bitwiseOR((F.col("gy") / tp).cast("long"))
-    )
+    tkey = cell_id_col(F.lit(z), F.col("gx") / tp, F.col("gy") / tp)
     pix = ((F.col("gy") % tp) * tp + (F.col("gx") % tp)).cast("int")
     keyed = steps.select(
         "pair_id", "i", "n", tkey.alias("_tk"), pix.alias("_pix")
@@ -127,11 +124,7 @@ def line_of_sight(
         F.collect_list("_pix").alias("pxs")
     )
     img = images.filter(F.col("z") == z).select(
-        (
-            F.shiftleft(F.col("z").cast("long"), 58)
-            .bitwiseOR(F.shiftleft(F.col("x").cast("long"), 29))
-            .bitwiseOR(F.col("y").cast("long"))
-        ).alias("_ik"),
+        cell_id_col().alias("_ik"),
         "fmt", "bytes", "w", "h",
     )
     joined = touched.join(img, on=F.col("_tk") == F.col("_ik"), how="left")

@@ -65,8 +65,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from tilegrab_spark.kernels import png
-from tilegrab_spark.operators.multimodal import decode_payload
+from tilegrab_spark.kernels import decode_payload, png
 
 __all__ = ["epoch_composite", "raster_trend"]
 

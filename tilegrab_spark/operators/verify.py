@@ -15,7 +15,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from tilegrab_spark.kernels import png
+from tilegrab_spark.kernels import decode_payload, png
 from tilegrab_spark.kernels.jpeg import psnr  # single PSNR definition
 
 VERIFY_SCHEMA = (
@@ -29,7 +29,8 @@ def verify_images(df: DataFrame, *, synthetic_oracle: bool = True, min_psnr: flo
     pixels/caption derive from the image_id's deterministic formula
     (FIXTURES.md §2) — the sandbox stand-in for comparing against a
     reference fetch. psnr is +inf (reported as 999.0) for exact matches;
-    a lossy codec would be gated at ``min_psnr``.
+    lossy rows (JPEG, and WebP whose first chunk is ``VP8 ``) are gated
+    at ``min_psnr``. Payloads decode through ``kernels.decode_payload``.
     """
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -44,19 +45,13 @@ def verify_images(df: DataFrame, *, synthetic_oracle: bool = True, min_psnr: flo
                 row = {"image_id": iid, "decode_ok": False, "phash_match": False,
                        "psnr": 0.0, "caption_match": False}
                 try:
-                    if fmt in ("jpg", "jpeg"):
-                        from tilegrab_spark.kernels import jpeg
-
-                        arr = jpeg.decode_jpeg(bytes(data))
-                        lossy = True
-                    elif fmt == "webp":
-                        from tilegrab_spark.kernels import webp
-
-                        arr = webp.decode_webp(bytes(data))
-                        lossy = False  # VP8L is lossless
-                    else:
-                        arr = png.decode_png(bytes(data))
-                        lossy = False
+                    data = bytes(data)
+                    arr = decode_payload(data, fmt, int(w), int(h))
+                    # a WebP is lossy when its first chunk is VP8 (VP8L
+                    # is lossless)
+                    lossy = fmt in ("jpg", "jpeg") or (
+                        fmt == "webp" and data[12:16] == b"VP8 "
+                    )
                     row["decode_ok"] = True
                     if synthetic_oracle:
                         want = expected_pixels(iid, int(w), int(h))

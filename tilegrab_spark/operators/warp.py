@@ -34,7 +34,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from tilegrab_spark.kernels import png
+from tilegrab_spark.kernels import decode_payload, png
+from tilegrab_spark.kernels.geo import pack_cell_id
 
 WARP_SCHEMA = (
     "image_id string, bytes binary, w int, h int, fmt string, "
@@ -87,8 +88,9 @@ def upsample_tiles(
     png_level: int = 3,
 ) -> DataFrame:
     """Children of every ``from_zoom`` tile at ``to_zoom`` (> from_zoom):
-    one decode per parent, 4^(Δz) resampled child tiles, zero shuffle.
-    Output rows carry the image-table schema (``WARP_SCHEMA``)."""
+    one decode per parent (``kernels.decode_payload``, so any image
+    ``fmt``), 4^(Δz) resampled PNG child tiles, zero shuffle. Output
+    rows carry the image-table schema (``WARP_SCHEMA``)."""
     if to_zoom <= from_zoom:
         raise ValueError(
             f"to_zoom must exceed from_zoom, got {from_zoom}->{to_zoom}"
@@ -103,15 +105,15 @@ def upsample_tiles(
     scale = 1 << dz
     sub = tile_px / scale  # source pixels per child tile (float-exact: pow2)
 
-    df = images.filter(F.col("z") == from_zoom).select("x", "y", "bytes")
+    df = images.filter(F.col("z") == from_zoom).select("x", "y", "bytes", "fmt")
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for x, y, data in zip(pdf["x"], pdf["y"], pdf["bytes"]):
+            for x, y, data, fmt in zip(pdf["x"], pdf["y"], pdf["bytes"], pdf["fmt"]):
                 if data is None:
                     continue
-                arr = png.decode_png(bytes(data))[:, :, :3]
+                arr = decode_payload(bytes(data), fmt, tile_px, tile_px)
                 for dyy in range(scale):
                     for dxx in range(scale):
                         child = resample_window(
@@ -119,7 +121,7 @@ def upsample_tiles(
                         )
                         cx = (int(x) << dz) | dxx
                         cy = (int(y) << dz) | dyy
-                        cell = (to_zoom << 58) | (cx << 29) | cy
+                        cell = int(pack_cell_id(cx, cy, to_zoom))
                         rows.append(
                             {
                                 "image_id": f"{to_zoom}_{cx}_{cy}_{src}",
@@ -135,7 +137,7 @@ def upsample_tiles(
                                 ),
                                 "phash": png.phash64(child),
                                 "zoom": to_zoom,
-                                "bucket": int(cell % n_buckets),
+                                "bucket": cell % n_buckets,
                             }
                         )
             if rows:

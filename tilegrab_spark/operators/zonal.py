@@ -32,8 +32,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from tilegrab_spark.kernels import geo
+from tilegrab_spark.kernels import decode_payload, geo
 from tilegrab_spark.sources.geometries import GeometrySet
+from tilegrab_spark.sources.images import cell_id_col
 
 _PARTIAL_SCHEMA = T.StructType([
     T.StructField("geom_id", T.StringType(), False),
@@ -43,24 +44,6 @@ _PARTIAL_SCHEMA = T.StructType([
     T.StructField("mn", T.IntegerType(), False),
     T.StructField("mx", T.IntegerType(), False),
 ])
-
-
-def _decode(fmt: str, data: bytes, w: int, h: int) -> np.ndarray:
-    if fmt == "raw":
-        return np.frombuffer(data, np.uint8).reshape(h, w, 3)
-    if fmt == "png":
-        from tilegrab_spark.kernels import png
-
-        return png.decode_png(data)
-    if fmt in ("jpg", "jpeg"):
-        from tilegrab_spark.kernels import jpeg
-
-        return jpeg.decode_jpeg(data)
-    if fmt == "webp":
-        from tilegrab_spark.kernels import webp
-
-        return webp.decode_webp(data)
-    raise ValueError(f"unsupported raster fmt {fmt!r}")
 
 
 def _pixel_centers(x: int, y: int, z: int, w: int, h: int):
@@ -184,7 +167,7 @@ def zonal_stats(
         for pdf in batches:
             rows = []
             for r in pdf.itertuples(index=False):
-                px = _decode(r.fmt, bytes(r.bytes), r.w, r.h)
+                px = decode_payload(bytes(r.bytes), r.fmt, r.w, r.h)
                 if exact and r.zone_class == 1:
                     polys = bc.value[r.geom_id]
                     m = np.zeros(px.shape[:2], dtype=bool)
@@ -270,11 +253,7 @@ def zonal_from_labels(
         F.col("w").alias("lw_"), F.col("h").alias("lh_"),
     ).filter(F.col("lab_").isNotNull())
     val = values_df.select(
-        (
-            F.shiftleft(F.col("z").cast("long"), 58)
-            .bitwiseOR(F.shiftleft(F.col("x").cast("long"), 29))
-            .bitwiseOR(F.col("y").cast("long"))
-        ).alias("vk_"),
+        cell_id_col().alias("vk_"),
         "fmt", "bytes", "w", "h",
     )
     joined = lab.join(val, on=F.col("lk_") == F.col("vk_"))
@@ -286,7 +265,7 @@ def zonal_from_labels(
             rows = []
             for r in pdf.itertuples(index=False):
                 try:
-                    px = _decode(r.fmt, bytes(r.bytes), int(r.w), int(r.h))
+                    px = decode_payload(bytes(r.bytes), r.fmt, int(r.w), int(r.h))
                 except (ValueError, NotImplementedError):
                     continue
                 chan = px.max(axis=2) if band == "max" else px[:, :, int(band)]
