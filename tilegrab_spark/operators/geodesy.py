@@ -97,7 +97,9 @@ def geodesic_measures(
     def area_term(lams, phis, i):
         l1, l2 = F.element_at(lams, i), F.element_at(lams, i + F.lit(1))
         p1, p2 = F.element_at(phis, i), F.element_at(phis, i + F.lit(1))
-        return (l2 - l1) * (F.lit(2.0) + F.sin(p1) + F.sin(p2))
+        # sin(p1) + sin(p2) commutes exactly, so reversing an edge negates
+        # its term bit-for-bit and a there-and-back spike sums to 0.0
+        return (l2 - l1) * (F.lit(2.0) + (F.sin(p1) + F.sin(p2)))
 
     def edge_len(lams, phis, i):
         l1, l2 = F.element_at(lams, i), F.element_at(lams, i + F.lit(1))
